@@ -18,7 +18,8 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
 
 from driver_sim import dtype_skews  # noqa: E402
 
@@ -107,7 +108,7 @@ def test_bench_history_ratios_filtering(tmp_path):
     in order."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     p = tmp_path / "hist.jsonl"
@@ -140,7 +141,7 @@ def test_bench_resolve_cpus_defaults_to_host(monkeypatch):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
@@ -160,7 +161,7 @@ def test_bench_compact_stdout_line_fits_driver_tail_buffer():
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     from score_spark.queries import QUERIES
@@ -206,7 +207,7 @@ def test_bench_gate_single_run_step_regression_fails_first_run():
     drift-band singles (<= 2.0) and borderline medians keep their old tiers."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     # step regression, first run: window median still healthy
@@ -383,7 +384,7 @@ def test_bench_history_load_auto_invalidation(tmp_path):
     hand-marking in the loop."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     base = {
@@ -421,7 +422,7 @@ def test_bench_steal_pct():
     exercised by any bench run."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     assert bench._steal_pct((100, 10_000), (150, 20_000)) == 0.5
@@ -452,7 +453,7 @@ def test_bench_duckdb_view_pattern_globs_directory_tables(tmp_path):
     the end-to-end ratio unmeasurable at sf1."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     (tmp_path / "lineitem.parquet").mkdir()  # Spark-written directory table

@@ -397,49 +397,78 @@ def test_n_planes_default_derives_from_corpus(spark, clustered):
 
 
 def test_near_dup_rerank_gather_matches_join_tier(spark, clustered, monkeypatch):
-    """Opt r14 (guide §8): the rerank's gather tier (broadcast corpus
-    matrix, map-only id-pair cosine) must produce EXACTLY the join tier's
-    rows — same sims to the emitted 4 dp (identical float64 einsum) and the
-    same inner-join drop of candidate pairs whose ids are absent from the
-    corpus (gather marks them NaN; the isnan guard removes them)."""
+    """Both pair_cosine tiers (broadcast gather table, map-only id-pair
+    cosine vs two id joins) must produce EXACTLY the same rows through both
+    of its callers — same sims to the emitted 4 dp (identical float64
+    einsum), same ranks — under one NULL contract: pairs whose ids are
+    absent from their source drop, as an inner join drops them, and a
+    zero-norm vector's undefined cosine is NULL, ranked last (a NaN that
+    reached Spark would rank FIRST instead)."""
     import itertools
 
-    from score_spark.operators.similarity import near_dup_pairs_lsh
+    from score_spark.operators import similarity
+    from score_spark.operators.similarity import near_dup_pairs_lsh, score_candidates
 
-    cand_rows = [(a, b) for a, b in itertools.combinations(range(30), 2)]
-    cand_rows.append((0, 99_999))  # id absent from the corpus
-    cand = spark.createDataFrame(cand_rows, "v1 bigint, v2 bigint")
+    zero = spark.createDataFrame([(100, [0.0] * 64)], "vec_id bigint, embedding array<double>")
+    corpus = clustered.select("vec_id", "embedding").unionByName(zero)
+    # near-dup pairs: one source; (0, 99_999) is absent, (0|1, 100) zero-norm
+    near_cand = spark.createDataFrame(
+        [*itertools.combinations(range(30), 2), (0, 99_999), (0, 100), (1, 100)],
+        "v1 bigint, v2 bigint",
+    )
+    # top-k: queries keyed outside the corpus id space (two sources), one
+    # of them zero-norm; neighbor 99_999 and query 2_000_000 are absent
+    queries = corpus.filter(F.col("vec_id").isin(0, 20, 100)).withColumn(
+        "vec_id", F.col("vec_id") + 1_000_000
+    )
+    qids = [1_000_000, 1_000_020, 1_000_100, 2_000_000]
+    topk_cand = spark.createDataFrame(
+        [(q, n) for q in qids for n in [*range(30), 100, 99_999]],
+        "query_id bigint, neighbor_id bigint",
+    )
 
-    gather_rows = {
-        tuple(r) for r in near_dup_pairs_lsh(clustered, threshold=0.9, cand=cand).collect()
-    }
+    def run():
+        near = near_dup_pairs_lsh(corpus, threshold=0.9, cand=near_cand)
+        topk = score_candidates(topk_cand, corpus, k=40, queries=queries)
+        joins = near._jdf.queryExecution().optimizedPlan().toString().count("Join")
+        joins += topk._jdf.queryExecution().optimizedPlan().toString().count("Join")
+        return {tuple(r) for r in near.collect()}, {tuple(r) for r in topk.collect()}, joins
+
+    near_g, topk_g, joins_g = run()
     # zero budget forces the join tier at call time
-    monkeypatch.setenv("SCORE_SPARK_RERANK_GATHER_MAX_BYTES", "0")
-    join_rows = {
-        tuple(r) for r in near_dup_pairs_lsh(clustered, threshold=0.9, cand=cand).collect()
-    }
-    assert gather_rows == join_rows
-    assert gather_rows  # non-vacuous: cluster 0's 20 vectors are near-dups
-    assert all(v2 != 99_999 for _, v2, _ in gather_rows)
+    monkeypatch.setattr(similarity, "GATHER_MAX_BYTES", 0)
+    near_j, topk_j, joins_j = run()
+    assert (joins_g, joins_j) == (0, 4)  # each call really ran its tier
+    assert near_g == near_j
+    assert topk_g == topk_j
+    # non-vacuous: cluster 0's vectors are near-dups; absent/zero-norm drop
+    assert near_g and all(v2 < 30 for _, v2, _ in near_g)
+    assert {q for q, *_ in topk_g} == {1_000_000, 1_000_020, 1_000_100}
+    assert all(n != 99_999 for _, n, _, _ in topk_g)
+    for q in (1_000_000, 1_000_020):
+        rows = sorted(r for r in topk_g if r[0] == q)
+        assert len(rows) == 31 and rows[-1][1:] == (100, None, 31)  # NULL ranks last
+    zq = sorted((rk, n, sim) for q, n, sim, rk in topk_g if q == 1_000_100)
+    assert [(n, sim) for _, n, sim in zq] == [(n, None) for n in [*range(30), 100]]
 
 
 def test_rerank_gather_table_guards(spark, clustered):
-    """The gather tier must refuse (-> join-tier fallback) when the corpus
+    """The gather table must refuse (-> join-tier fallback) when the corpus
     exceeds the byte budget or carries duplicate ids; when it fits, the
     table is id-sorted and dense."""
-    from score_spark.operators.similarity import _rerank_gather_table
+    from score_spark.operators.similarity import _gather_table
 
     # budget of one row < 100-row corpus -> None
-    assert _rerank_gather_table(clustered, "vec_id", "embedding", 64, 64 * 8) is None
+    assert _gather_table(clustered, "vec_id", "embedding", 64, 64 * 8) is None
     # zero/invalid dim -> None without any job
-    assert _rerank_gather_table(clustered, "vec_id", "embedding", 0, 1 << 30) is None
+    assert _gather_table(clustered, "vec_id", "embedding", 0, 1 << 30) is None
     # duplicate ids break the unique-gather precondition -> None
     dup = clustered.select("vec_id", "embedding").unionAll(
         clustered.select("vec_id", "embedding").limit(1)
     )
-    assert _rerank_gather_table(dup, "vec_id", "embedding", 64, 1 << 30) is None
+    assert _gather_table(dup, "vec_id", "embedding", 64, 1 << 30) is None
     # fits -> id-sorted ids + (n, dim) float64 matrix
-    t = _rerank_gather_table(clustered, "vec_id", "embedding", 64, 1 << 30)
+    t = _gather_table(clustered, "vec_id", "embedding", 64, 1 << 30)
     assert t is not None
     ids, E = t
     assert list(ids) == sorted(ids)

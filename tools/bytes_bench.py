@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +35,7 @@ from pyspark.sql.window import Window
 from score_spark.schema_on_read.bytes_audit import pruning_ratio
 from score_spark.schema_on_read.generator import SchemaOnRead
 
-FIXTURE_DIR = os.environ.get("SCORE_SPARK_BYTES_DIR", "/root/repo/.bench_fixtures")
+FIXTURE_DIR = os.environ.get("SCORE_SPARK_BYTES_DIR", os.path.join(REPO_ROOT, ".bench_fixtures"))
 N_ROWS = 120_000
 # the JSON wall-clock fixture is larger: at 120k rows the full parse finishes
 # in ~0.4 s, so Spark's constant schedule/launch cost (~0.2 s) swamped the

@@ -20,7 +20,7 @@ non-key columns stays constant — fine for the probed queries, whose group
 keys are flags/priorities/nations with fixed domains at every SF).
 
 Usage: python tools/gen_sf_replica.py [src_sf_dir] [dst_dir] [K]
-       defaults: /root/testdata/sf0.1 /root/repo/.scale_fixtures/sf1 10
+       defaults: the sf0.1 testdata dir, <checkout>/.scale_fixtures/sf1, 10
 """
 
 from __future__ import annotations
@@ -28,7 +28,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import pyspark.sql.functions as F  # noqa: N812
 
@@ -81,7 +82,7 @@ def replicate(spark, src: str, dst: str, k: int) -> dict:
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale_fixtures/sf1"
+    dst = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO_ROOT, ".scale_fixtures", "sf1")
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
     from score_spark.session import get_session

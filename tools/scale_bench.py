@@ -34,12 +34,13 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import pyspark.sql.functions as F  # noqa: N812
 from pyspark.sql import DataFrame, SparkSession
 
-WORK_DIR = os.environ.get("SCORE_SPARK_SCALE_DIR", "/root/repo/.scale_fixtures")
+WORK_DIR = os.environ.get("SCORE_SPARK_SCALE_DIR", os.path.join(REPO_ROOT, ".scale_fixtures"))
 SEED = 7
 BASE_DOCS = 5_000  # sf0.1-shaped
 BASE_VECS = 2_000
