@@ -8,14 +8,22 @@ Scale design (the whole point at 100 TB):
   is bounded by shingle frequency, not by |docs|^2. No broadcast hints
   anywhere: the freq and sizes tables grow with the corpus, so the join
   strategy is left to AQE (it will broadcast only when actually small).
-- MinHash+LSH: fixed-width signature via xxhash64 with per-row seeds →
-  band buckets → pairs only within buckets. Tunable (n_hashes, bands) to the
-  target Jaccard threshold t ≈ (1/b)^(1/r). The candidate distinct carries
-  only (d1, d2, est_jaccard) — never the signatures — through the shuffle.
-- SimHash: 64 per-bit conditional sums in ONE aggregate pass (no explode
-  shuffle amplification), bucketed by (max_hamming + 1) bit-chunks so the
-  pigeonhole guarantee holds for ANY max_hamming: a pair within distance d
-  differs in <= d chunks, so with d + 1 chunks at least one chunk matches.
+- Blocking pair miners share ONE banded self-join, ``band_pairs``: one
+  bucket key per band, posexploded, self-joined on (band, key) with
+  a.id < b.id, scored and filtered before a distinct that carries only the
+  two ids and the score — never the signatures — through the shuffle.
+  (similarity.lsh_pair_candidates' hyperplane tables use it too.)
+- MinHash+LSH: fixed-width signature via xxhash64 with per-hash seeds; the
+  bands are xxhash64 of each band's rows. Tunable (n_hashes, bands) to the
+  target Jaccard threshold t ≈ (1/b)^(1/r); the score is the signature
+  agreement.
+- SimHash: per-bit conditional sums in ONE aggregate pass (no explode
+  shuffle amplification), as a ``long`` (<= 63 bits) or an ``array<long>``
+  of 63-bit words. The bands are (max_hamming + 1) balanced bit-chunks, so
+  the pigeonhole guarantee holds for ANY max_hamming: a pair within
+  distance d differs in <= d chunks, so with d + 1 chunks at least one
+  chunk matches. One ``hamming_pairs`` serves both signature types; the
+  score is the exact per-word popcount sum.
 
 Oracle strategy for the hash-family operators (d03/d04): Spark materializes
 the engine-specific intermediate (candidate pairs / signatures) through
@@ -27,7 +35,7 @@ signatures — so everything deterministic is hash-checked by the driver.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
@@ -305,6 +313,60 @@ def exact_jaccard_for_pairs(
     )
 
 
+# ------------------------------------------------------ banded self-join
+
+
+def band_pairs(
+    df: DataFrame,
+    id_col: str,
+    keys: Column,
+    payload: str | None = None,
+    score: Column | None = None,
+    keep: Column | None = None,
+    names: tuple[str, str] = ("d1", "d2"),
+) -> DataFrame:
+    """Distinct id-ordered pairs of ``df`` rows that share a bucket in ANY
+    band — the one banded self-join behind every blocking pair miner
+    (MinHash bands, SimHash pigeonhole chunks, hyperplane-LSH tables).
+
+    ``keys`` is an array Column with one bucket key per band; it is
+    ``posexplode``d in the same select that projects the id (``_id``) and
+    the optional ``payload`` column (``_p``), and the exploded rows
+    self-join on (band ``_t``, key ``_k``) with ``a._id < b._id``. ``score``
+    is an aliased Column that may read ``a._p`` / ``b._p``; ``keep`` filters
+    on it. Both run BEFORE the ``distinct`` that folds a pair colliding in
+    several bands into one row, so only the two ids (named by ``names``)
+    and the score cross the dedup exchange — never the payload, and the
+    threshold first drops the random collisions that dominate the join
+    output at scale (opt r13, guide §2.3). The score must be a function of
+    the pair alone, or the distinct would keep one row per distinct value.
+
+    Pass ``keys`` as the inline expression (an ``array(...)`` constructor or
+    a UDF call), never as a column projected beforehand: for a generator
+    over a bare column Spark infers ``size(keys) > 0`` and pushes that
+    filter below the projection, which copies the key expressions — and the
+    whole upstream signature computation they read, e.g. the SimHash
+    aggregate's word sums — into a second, per-row evaluation."""
+    cols = [F.col(id_col).alias("_id")]
+    if payload is not None:
+        cols.append(F.col(payload).alias("_p"))
+    banded = df.select(*cols, F.posexplode(keys).alias("_t", "_k"))
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a._t") == F.col("b._t"))
+        & (F.col("a._k") == F.col("b._k"))
+        & (F.col("a._id") < F.col("b._id")),
+    ).select(
+        F.col("a._id").alias(names[0]),
+        F.col("b._id").alias(names[1]),
+        *([score] if score is not None else []),
+    )
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    return pairs.distinct()
+
+
 # ----------------------------------------------------------- MinHash + LSH
 
 
@@ -382,38 +444,23 @@ def minhash_lsh_pairs(
     # blow-up banding exists to prevent (confirmed by execution, review
     # r9). An empty shingle set can never be an n-gram near-dup; drop.
     sigs = sigs.filter(F.col("sig")[0].isNotNull())
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bucket', xxhash64(concat_ws(',', {cols})))".format(
-            b=bnd, cols=", ".join(f"sig[{bnd * rows + r}]" for r in range(rows))
+    keys = ", ".join(
+        "xxhash64(concat_ws(',', {}))".format(
+            ", ".join(f"sig[{bnd * rows + r}]" for r in range(rows))
         )
         for bnd in range(bands)
     )
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.expr(f"explode(array({band_structs}))").alias("bb"),
-    ).select("doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
     # static per-position comparison sum instead of size(filter(zip_with)):
     # n_hashes is a compile-time constant and Spark evaluates HOF lambdas
     # interpreted per candidate row, while the unrolled IF-sum is whole-stage
     # codegen — same counts, same est_jaccard (opt r13, guide §1.2/§4.1)
-    agree = F.expr(
-        " + ".join(f"IF(a.sig[{i}] = b.sig[{i}], 1, 0)" for i in range(n_hashes))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
-        )
-        .distinct()
+    agree = F.expr(" + ".join(f"IF(a._p[{i}] = b._p[{i}], 1, 0)" for i in range(n_hashes)))
+    return band_pairs(
+        sigs,
+        "doc_id",
+        F.expr(f"array({keys})"),
+        payload="sig",
+        score=F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
     )
 
 
@@ -512,45 +559,45 @@ def simhash(
     )
 
 
-def _scalar_chunk_exprs(sig_col: str, n_chunks: int, n_bits: int = 64) -> list[str]:
-    """Balanced PARTITION of the ``n_bits`` bit space: chunk i covers
-    [i*n_bits//n, (i+1)*n_bits//n) — every chunk non-empty, every shift <
-    64. The old uniform ceil-width layout shifted chunk starts past bit 63
-    for max_hamming >= 8, and Spark's shiftrightunsigned (Java >>>) masks
-    the shift amount to 6 bits, so the high chunks silently ALIASED the low
-    ones and a pair at exactly the bound could be missed (review r7,
-    confirmed by execution: sigs 0x0 vs 0x0101010101010101 at distance 8
-    returned no pair). ``n_bits`` matters for sized sub-64-bit signatures
-    (review r12): partitioning a 32-bit signature over 64 bits hands every
-    chunk above bit 31 a constant-zero key — one all-corpus hot bucket per
-    dead chunk, the exact degeneracy the width sizing exists to avoid.
-    Module-level so probes can measure bucket occupancy with the EXACT
-    production keys (tools/probe_d04_sizing_e2e.py)."""
+def _chunk_keys(sig_col: str, n_bits: int, n_chunks: int, word_bits: int) -> list[str]:
+    """Chunk-key SQL for the pigeonhole blocking: a balanced PARTITION of the
+    ``n_bits`` bit space, chunk c covering global bits
+    [c*n_bits//n_chunks, (c+1)*n_bits//n_chunks) — every chunk non-empty,
+    every shift < 64. ``word_bits=64`` reads a scalar ``long`` signature as
+    one word (``sig``); ``word_bits=63`` reads an ``array<long>`` signature
+    word by word (``sig[w]``, 63 usable bits each). A chunk spanning a word
+    boundary is keyed by ``xxhash64`` of its per-word segments —
+    deterministic in the chunk content, so identical chunks always share a
+    bucket (a 2^-64 hash collision only adds a candidate the exact popcount
+    filter removes).
 
-    def chunk_expr(c: int) -> str:
-        start = c * n_bits // n_chunks
-        width = (c + 1) * n_bits // n_chunks - start
-        shifted = f"shiftrightunsigned(`{sig_col}`, {start})"
-        # width == 64 (max_hamming = 0: exact-duplicate blocking) masks
-        # nothing — and (1 << 64) - 1 would overflow a bigint literal
-        return shifted if width >= 64 else f"{shifted} & {(1 << width) - 1}L"
+    The balanced layout replaced a uniform ceil-width one that shifted
+    chunk starts past bit 63 for max_hamming >= 8; Spark's
+    shiftrightunsigned (Java >>>) masks the shift amount to 6 bits, so the
+    high chunks silently ALIASED the low ones and a pair at exactly the
+    bound could be missed (review r7, confirmed by execution: sigs 0x0 vs
+    0x0101010101010101 at distance 8 returned no pair). ``n_bits`` must be
+    the REAL width (review r12): partitioning a 32-bit signature over 64
+    bits hands every chunk above bit 31 a constant-zero key — one
+    all-corpus hot bucket per dead chunk, the exact degeneracy the width
+    sizing exists to avoid. Module-level so probes can measure bucket
+    occupancy with the EXACT production keys
+    (tools/probe_d04_sizing_e2e.py)."""
 
-    return [chunk_expr(c) for c in range(n_chunks)]
-
-
-def _wide_chunk_exprs(sig_col: str, n_bits: int, n_chunks: int) -> list[str]:
-    """Chunk-key SQL for multi-word signatures: chunk c covers global bits
-    [c*n_bits/n, (c+1)*n_bits/n); a chunk spanning word boundaries is keyed
-    by xxhash64 of its per-word segments (see _hamming_pairs_wide)."""
+    def word(w: int) -> str:
+        return f"`{sig_col}`" if word_bits == 64 else f"`{sig_col}`[{w}]"
 
     def chunk_key(c: int) -> str:
         start, end = c * n_bits // n_chunks, (c + 1) * n_bits // n_chunks
         pieces, s = [], start
         while s < end:
-            w, off = s // 63, s % 63
-            take = min(end - s, 63 - off)
-            piece = f"shiftrightunsigned(`{sig_col}`[{w}], {off})"
-            pieces.append(f"({piece} & {(1 << take) - 1}L)")
+            w, off = divmod(s, word_bits)
+            take = min(end - s, word_bits - off)
+            piece = f"shiftrightunsigned({word(w)}, {off})"
+            # take == 64 (max_hamming = 0 over a full long: exact-duplicate
+            # blocking) masks nothing — and (1 << 64) - 1 would overflow a
+            # bigint literal
+            pieces.append(piece if take >= 64 else f"({piece} & {(1 << take) - 1}L)")
             s += take
         return pieces[0] if len(pieces) == 1 else f"xxhash64({', '.join(pieces)})"
 
@@ -565,209 +612,112 @@ def hamming_pairs(
     n_bits: int | None = None,
 ) -> DataFrame:
     """ALL pairs within max_hamming bits, via chunk blocking with a correct
-    pigeonhole bound: the 64-bit signature splits into (max_hamming + 1)
-    chunks, so any pair differing in <= max_hamming bits shares at least one
-    identical chunk — full recall guaranteed for any max_hamming <= 63, never
-    an all-pairs join. (r1 hardcoded 4 chunks, which only covers distance 3;
-    ADVICE r1 finding.)
+    pigeonhole bound: the signature's ``n_bits`` splits into
+    (max_hamming + 1) balanced chunks (:func:`_chunk_keys`), so any pair
+    differing in <= max_hamming bits shares at least one identical chunk —
+    full recall guaranteed, never an all-pairs join unless the bound spans
+    the whole width. (r1 hardcoded 4 chunks, which only covers distance 3;
+    ADVICE r1 finding.) The chunks are the bands of :func:`band_pairs`; the
+    score is the exact distance as a static sum of per-word popcounts
+    (codegen, not an interpreted zip_with/aggregate HOF — opt r13), and the
+    ``<= max_hamming`` filter runs before the dedup exchange.
+
+    One function for both signature types:
+
+    - ``long`` (``simhash(df)``, ``n_bits <= 63``): one 64-bit word.
+      ``n_bits=None`` partitions all 64 bits (always safe for externally
+      built signatures); a declared ``n_bits < 64`` is checked lazily by a
+      JVM assert (real bits at/above it fail the query — a negative long
+      trips it too, shiftrightunsigned being a LOGICAL shift). When
+      ``max_hamming >= n_bits`` blocking cannot prune (a pair may differ in
+      every real bit), so the partition widens to all 64 bits, whose
+      constant top bits form a shared catch-all bucket: explicitly
+      all-pairs (review r12).
+    - ``array<long>`` (``simhash(df, n_bits > 63)``): 63 usable bits per
+      word. ``n_bits`` MUST equal the width the signatures were built with
+      (``simhash_candidate_pairs`` passes it through): a larger value
+      dilutes the partition with constant-zero pad bits concentrated in the
+      LAST chunk (152 bits padded to 189 leaves chunk 3 with 11 real bits,
+      an effective 2^11-bucket hot chunk), a smaller one breaks the
+      pigeonhole guarantee. The word count follows from ``n_bits`` with no
+      job, and a lazy ``size()`` assert fails the query when the arrays
+      disagree (review r12: the eager probe forced the whole signature
+      aggregation once just to read a length). ``n_bits=None`` probes the
+      word count with one ``.first()`` job and partitions all 63 * words
+      bits — the recall-safe fallback.
 
     Candidate volume vs corpus size (measured, r11 second-decade probe):
     the chunk-bucket join compares Theta(n^2 / 2^w) candidate pairs per
-    chunk (w = chunk width, 16 bits here) — random signatures collide per
-    pair with constant probability, so at FIXED signature width the
-    comparison volume grows quadratically even though the OUTPUT stays
-    linear (probe: pairs exactly the planted rate and full recall at 10x
-    and 100x, but CPU ~36x on 10x docs as the 500k-doc corpus put ~7.6
-    docs per 16-bit bucket). Same class as lsh_pair_candidates' finding:
-    hold the budget by widening the signature with the corpus (152-bit
-    simhash -> 38-bit chunks at the same max_hamming), i.e. w ~ 2 log2(n)
-    — :func:`recommended_simhash_bits` is that law as code, and wide
-    ``array<long>`` signatures from ``simhash(df, n_bits=...)`` dispatch
-    to the multi-word chunk join below automatically. The comparison is a
-    cheap JVM popcount and only ids/signatures move through the join
-    either way."""
+    chunk (w = chunk width) — random signatures collide per pair with
+    constant probability, so at FIXED signature width the comparison
+    volume grows quadratically even though the OUTPUT stays linear (probe:
+    CPU ~36x on 10x docs as the 500k-doc corpus put ~7.6 docs per 16-bit
+    bucket). :func:`recommended_simhash_bits` holds the budget by widening
+    the signature with the corpus, w ~ 2 log2(n)."""
+
+    def asserting(cond: str, msg: str) -> DataFrame:
+        # the declared width is validated LAZILY by a JVM assert on each
+        # signature row — no job, unlike the eager probe below
+        return sigs.where(F.expr(f"assert_true({cond}, {msg}) IS NULL"))
+
     if isinstance(sigs.schema[sig_col].dataType, T.ArrayType):
-        return _hamming_pairs_wide(sigs, max_hamming, id_col, sig_col, n_bits)
-    # n_bits on the SCALAR path (review r12 — it was silently ignored):
-    # sized sub-63-bit signatures from simhash(df, n_bits=32) must partition
-    # their REAL bit space, or the chunks above bit 31 carry constant-zero
-    # keys and bucket the whole corpus together. None keeps the always-safe
-    # full-64-bit partition for externally built signatures.
-    if not 0 <= max_hamming <= 63:
-        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
-    if n_bits is None:
-        n_bits = 64
-    if not 1 <= n_bits <= 64:
-        raise ValueError(f"n_bits must be in [1, 64] for a long signature, got {n_bits}")
-    if max_hamming >= n_bits:
-        # the threshold spans the whole real bit space, so blocking cannot
-        # prune (a pair may differ in EVERY real bit and share no real
-        # chunk). Partition the full 64 bits instead: the constant bits
-        # above n_bits form a shared catch-all bucket, which is explicitly
-        # an all-pairs join — the same degenerate-but-correct shape the
-        # legacy 64-bit layout provided for max_hamming=63 over 63-bit
-        # signatures (review r12).
-        n_bits = 64
-    n_chunks = max_hamming + 1
-    chunk_structs = ", ".join(
-        f"named_struct('chunk_id', {c}, 'chunk', {e})"
-        for c, e in enumerate(_scalar_chunk_exprs(sig_col, n_chunks, n_bits))
-    )
-    chunks = sigs.select(
-        F.col(id_col).alias("_id"),
-        F.col(sig_col).alias("_sig"),
-        F.expr(f"explode(array({chunk_structs}))").alias("cc"),
-    )
-    if n_bits < 64:
-        # declared-width check fused into the projection, mirroring the
-        # wide path's lazy size() assert (ADVICE r12): a signature with
-        # real bits at or above the declared n_bits means the declaration
-        # lied — recall would survive (pigeonhole over the declared bits
-        # plus the exact popcount filter), but every undeclared high bit
-        # silently skews bucket balance toward the exact hot-bucket
-        # degeneracy the parameter exists to prevent. Fail loudly instead.
-        # shiftrightunsigned is a LOGICAL shift, so a negative (bit-63)
-        # signature also trips it; n_bits=64 needs no check (and Spark
-        # masks shift amounts to 6 bits, so >>64 would be a no-op anyway).
-        chunks = chunks.where(
-            F.expr(
-                f"assert_true(shiftrightunsigned(`_sig`, {n_bits}) = 0, "
-                f"'signature has real bits at/above declared n_bits={n_bits}: '"
-                f" || hex(`_sig`)) IS NULL"
+        word_bits = 63
+        if n_bits is not None:
+            if n_bits < 1:
+                raise ValueError(f"n_bits must be >= 1, got {n_bits}")
+            n_words = -(-n_bits // 63)
+        else:
+            first = sigs.select(F.size(F.col(sig_col)).alias("n")).first()
+            if first is None:  # empty input: empty output through the same schema
+                id_t = sigs.schema[id_col].dataType.simpleString()
+                return sigs.sparkSession.createDataFrame(
+                    [], f"d1 {id_t}, d2 {id_t}, hamming int"
+                )
+            n_words = int(first["n"])
+            n_bits = 63 * n_words
+        if not 63 * (n_words - 1) < n_bits <= 63 * n_words:
+            raise ValueError(
+                f"n_bits={n_bits} inconsistent with {n_words}-word signatures "
+                f"(must be in ({63 * (n_words - 1)}, {63 * n_words}])"
             )
+        if not 0 <= max_hamming < n_bits:
+            raise ValueError(f"max_hamming must be in [0, {n_bits - 1}], got {max_hamming}")
+        # a missing word gives NULL chunk keys (silent recall loss)
+        sigs = asserting(
+            f"size(`{sig_col}`) = {n_words}",
+            f"'n_bits={n_bits} inconsistent with signature width: '"
+            f" || size(`{sig_col}`) || ' words, expected {n_words}'",
         )
-    chunks = chunks.select("_id", "_sig", "cc.chunk_id", "cc.chunk")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    # popcount + threshold BEFORE the dedup exchange (opt r13, guide §2.3):
-    # the join's output is dominated by random chunk collisions that fail
-    # the distance bound, and a pair's hamming is determined by its ids, so
-    # filtering first shrinks the distinct's shuffle from (all candidates x
-    # two ids + two signatures) to (surviving pairs x two ids + one int) —
-    # the popcount per duplicate candidate is registers-only codegen, the
-    # exchange it replaces is the dominant cost of this stage at scale.
-    hamming = F.bit_count(F.col("a._sig").bitwiseXOR(F.col("b._sig"))).cast("int")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("d1"),
-            F.col("b._id").alias("d2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def _hamming_pairs_wide(
-    sigs: DataFrame, max_hamming: int, id_col: str, sig_col: str, n_bits: int | None = None
-) -> DataFrame:
-    """hamming_pairs over multi-word ``array<long>`` signatures (63 usable
-    bits per word, from ``simhash(df, n_bits > 63)``).
-
-    Pigeonhole over the REAL ``n_bits`` bit space: chunk c covers global
-    bits [c*B/(d+1), (c+1)*B/(d+1)) — a balanced partition, so a pair within
-    distance d shares at least one bit-identical chunk. A chunk that spans a
-    word boundary is keyed by ``xxhash64`` of its per-word segments
-    (deterministic in the chunk content, so identical chunks always share a
-    bucket — full recall; a 2^-64 hash collision only adds a candidate that
-    the exact popcount filter below removes).
-
-    ``n_bits`` MUST equal the width the signatures were built with (pass it
-    through, or use ``simhash_candidate_pairs`` which does). It matters two
-    ways: a value LARGER than the real width dilutes the partition with
-    constant-zero pad bits that concentrate in the LAST chunk — for a
-    152-bit signature in 3 words, padding to 189 would leave chunk 3 with
-    only 11 real bits, an effective 2^11-bucket hot chunk (worse than the
-    fixed 16-bit width this path exists to escape); a value SMALLER than
-    the real width breaks the pigeonhole guarantee (differing bits above
-    n_bits are never chunked, so a pair can miss every bucket). Defaulting
-    to 63 * n_words (all representable bits) is the always-safe-for-recall
-    fallback for externally built signatures. The final distance is exact
-    either way: a per-word JVM popcount over FULL words, summed via
-    zip_with/aggregate. Only ids + signatures move through the join."""
-    if n_bits is not None:
-        # the word count follows from the declared width — no job needed.
-        # The .first() probe below forces the ENTIRE uncached signature
-        # aggregation once just to read an array length, then the chunk
-        # join recomputes it from scratch: ~2x signature-build cost on
-        # exactly the scale path the sizing rule serves (review r12).
-        if n_bits < 1:
-            raise ValueError(f"n_bits must be >= 1, got {n_bits}")
-        n_words = -(-n_bits // 63)
     else:
-        first = sigs.select(F.size(F.col(sig_col)).alias("n")).first()
-        if first is None:  # empty input: empty output through the same schema
-            id_t = sigs.schema[id_col].dataType.simpleString()
-            return sigs.sparkSession.createDataFrame(
-                [], f"d1 {id_t}, d2 {id_t}, hamming int"
+        word_bits, n_words = 64, 1
+        if not 0 <= max_hamming <= 63:
+            raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
+        if n_bits is None:
+            n_bits = 64
+        if not 1 <= n_bits <= 64:
+            raise ValueError(f"n_bits must be in [1, 64] for a long signature, got {n_bits}")
+        if max_hamming >= n_bits:
+            n_bits = 64
+        if n_bits < 64:
+            # undeclared high bits keep recall but skew bucket balance toward
+            # the hot-bucket degeneracy n_bits exists to prevent (ADVICE r12)
+            sigs = asserting(
+                f"shiftrightunsigned(`{sig_col}`, {n_bits}) = 0",
+                f"'signature has real bits at/above declared n_bits={n_bits}: '"
+                f" || hex(`{sig_col}`)",
             )
-        n_words = int(first["n"])
-        n_bits = 63 * n_words
-    if not 63 * (n_words - 1) < n_bits <= 63 * n_words:
-        raise ValueError(
-            f"n_bits={n_bits} inconsistent with {n_words}-word signatures "
-            f"(must be in ({63 * (n_words - 1)}, {63 * n_words}])"
-        )
-    if not 0 <= max_hamming < n_bits:
-        raise ValueError(f"max_hamming must be in [0, {n_bits - 1}], got {max_hamming}")
-    n_chunks = max_hamming + 1
-    chunk_structs = ", ".join(
-        f"named_struct('chunk_id', {c}, 'chunk', {e})"
-        for c, e in enumerate(_wide_chunk_exprs(sig_col, n_bits, n_chunks))
-    )
-    chunks = (
-        sigs.select(
-            F.col(id_col).alias("_id"),
-            F.col(sig_col).alias("_sig"),
-            F.expr(f"explode(array({chunk_structs}))").alias("cc"),
-        )
-        # the declared width must match the arrays or chunk keys reference
-        # missing words (NULL keys: silent recall loss) / skip real bits.
-        # Validated LAZILY with a JVM assert fused into this projection —
-        # a size() per row, not the eager .first() probe that forced the
-        # whole signature aggregation once just to read a length
-        .where(
-            F.expr(
-                f"assert_true(size(`_sig`) = {n_words}, "
-                f"'n_bits={n_bits} inconsistent with signature width: '"
-                f" || size(`_sig`) || ' words, expected {n_words}') IS NULL"
-            )
-        )
-        .select("_id", "_sig", "cc.chunk_id", "cc.chunk")
-    )
-    a, b = chunks.alias("a"), chunks.alias("b")
-    # exact distance as a STATIC sum of per-word popcounts (word count is
-    # known from n_words) instead of aggregate(zip_with(...)): Spark
-    # evaluates HOF lambdas interpreted per row, the static sum is codegen
-    # — same arithmetic, same result (opt r13; mirrors the oracle-side
-    # finding that static terms beat list_transform 2.5x in DuckDB too).
-    # Filter + threshold run BEFORE the dedup exchange, and only (d1, d2,
-    # hamming) cross it instead of two multi-word signature arrays — see
-    # the scalar path's comment for the shuffle-bytes accounting.
+    keys = _chunk_keys(sig_col, n_bits, max_hamming + 1, word_bits)
+    words = ["_p"] if word_bits == 64 else [f"_p[{w}]" for w in range(n_words)]
     hamming = F.expr(
-        " + ".join(
-            f"CAST(bit_count(a._sig[{w}] ^ b._sig[{w}]) AS INT)" for w in range(n_words)
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("d1"),
-            F.col("b._id").alias("d2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        " + ".join(f"CAST(bit_count(a.{w} ^ b.{w}) AS INT)" for w in words)
+    ).alias("hamming")
+    return band_pairs(
+        sigs,
+        id_col,
+        F.expr(f"array({', '.join(keys)})"),
+        payload=sig_col,
+        score=hamming,
+        keep=F.col("hamming") <= max_hamming,
     )
 
 
@@ -985,23 +935,19 @@ def d02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip a <=50 cap decision or perturb one intersection count, surfacing as
     a hash-mismatch here rather than a flagged divergence. If this gate ever
     fails non-reproducibly across corpora, suspect a shingle collision first:
-    set SCORE_SPARK_D02_EXACT=1 (no code edit needed) to rerun the identical
-    pipeline on exact shingle strings — a matching gate under the flag
-    confirms a collision; a still-failing gate clears the hash family and
-    points at the plan (VERDICT r5 #8)."""
-    import os
-
+    rerun the identical pipeline on exact shingle strings with
+    ``ngram_jaccard_pairs(docs, n=3, threshold=0.03, max_doc_freq=50,
+    hash_ids=False)`` — a result matching the oracle confirms a collision; a
+    still-mismatching one clears the hash family and points at the plan
+    (VERDICT r5 #8)."""
     d = load_table(spark, sf_dir, "documents")
-    exact = os.environ.get("SCORE_SPARK_D02_EXACT", "") not in ("", "0")
     # eager=False (opt r14, VERDICT r13 #1): the eager localCheckpoint paid a
     # full extra materialization job (compute + block store + re-read) per
     # run just to free the shingle cache before returning. The lazy wrapper's
     # finalize frees the cache on GC instead; the wrapper must ride on the
     # derived orderBy frame (ngram_jaccard_pairs contract) so the cache lives
     # until the consumer drops the result.
-    res = ngram_jaccard_pairs(
-        d, n=3, threshold=0.03, max_doc_freq=50, eager=False, hash_ids=not exact
-    )
+    res = ngram_jaccard_pairs(d, n=3, threshold=0.03, max_doc_freq=50, eager=False)
     out = res.orderBy("d1", "d2")
     out._score_spark_keepalive = res
     return out

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from score_spark.io import fan_out, load_table, presentation_sort
+from score_spark.operators.dedup import band_pairs
 from score_spark.xcheck import write_xcheck, xcheck_path
 
 
@@ -579,16 +580,16 @@ def lsh_pair_candidates(
     """Distinct id-ordered (v1, v2) candidate pairs from banded multi-table
     LSH: ``n_tables`` independent tables of ``n_planes`` sign-bit hyperplanes
     each; two rows become candidates when they collide on ANY table's full
-    k-bit key — the same OR-of-ANDs amplification as minhash banding in
-    ``dedup.minhash_lsh_pairs``. vs the r2 single-table + bit-flip probing:
-    per-table collision volume shrinks by 2^-k while recall for high-sim
-    pairs amplifies with L (a sim-s pair misses only if every table splits
-    it: (1-p^k)^L, p = 1 - acos(s)/pi), and the explode fan-out is L rows
-    instead of 1 + sum(C(k,h)) probe rows. All L*k sign bits come from ONE
-    Arrow-batched matmul per input batch. ONLY scalar ids and band keys move
-    through the join and the dedup — never the vectors, so the dedup
-    exchange is two longs wide instead of two full embeddings (VERDICT r2
-    "What's wrong" #1).
+    k-bit key — the same OR-of-ANDs amplification, and the same banded
+    self-join (``dedup.band_pairs``), as minhash banding. vs the r2
+    single-table + bit-flip probing: per-table collision volume shrinks by
+    2^-k while recall for high-sim pairs amplifies with L (a sim-s pair
+    misses only if every table splits it: (1-p^k)^L, p = 1 - acos(s)/pi),
+    and the explode fan-out is L rows instead of 1 + sum(C(k,h)) probe rows.
+    All L*k sign bits come from ONE Arrow-batched matmul per input batch.
+    ONLY scalar ids and band keys move through the join and the dedup —
+    never the vectors, so the dedup exchange is two longs wide instead of
+    two full embeddings (VERDICT r2 "What's wrong" #1).
 
     Sizing k with the corpus (measured, r11 second-decade probe): the
     random-pair collision probability is a PER-PAIR constant (~L * p_rand^k),
@@ -623,18 +624,8 @@ def lsh_pair_candidates(
     # nondeterministic marker: see lsh_bucket (join-key isnotnull inference
     # would duplicate the matmul eval). no fan_out: bucketing is map-only
     # vectorized work, scan splits provide the parallelism at scale.
-    arr = emb.select(
-        F.col(id_col).alias("_id"),
-        band_keys.asNondeterministic()(F.col(vec_col)).alias("_bk"),
-    )
-    banded = arr.select("_id", F.posexplode("_bk").alias("_t", "_k"))
-    a = banded.select(F.col("_id").alias("v1"), "_t", "_k")
-    b = banded.select(F.col("_id").alias("v2"), "_t", "_k")
-    return (
-        a.join(b, ["_t", "_k"])
-        .filter(F.col("v1") < F.col("v2"))
-        .select("v1", "v2")
-        .dropDuplicates(["v1", "v2"])
+    return band_pairs(
+        emb, id_col, band_keys.asNondeterministic()(F.col(vec_col)), names=("v1", "v2")
     )
 
 

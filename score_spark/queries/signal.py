@@ -42,7 +42,7 @@ HASH_PINS: dict[str, str] = {
     "d01_exact_dedup": "Summary pins the unique-fingerprint count, total duplicates removed, and the first canonical keeper id — any md5-grouping or min-keeper error moves one of them.",
     "d02_ngram_jaccard": "One row per pair with exact Jaccard at 4dp — pair MEMBERSHIP (threshold + doc-freq cap) and the intersection/union arithmetic are both pinned.",
     "d03_minhash_lsh": "Banded candidates materialized via xcheck, then BOTH engines recompute exact Jaccard and the signature-agreement estimate on the same pairs — banding recall and estimate arithmetic pinned.",
-    "d04_simhash": "DuckDB brute-forces ALL C(n,2) Hamming distances over the xcheck'd signatures while Spark uses pigeonhole blocking — a blocking recall miss fails the row, not just wrong arithmetic; since r13 the row carries BOTH the classic 63-bit scalar path and the AUTO-SIZED wide path (recommended_simhash_bits(corpus_count) = 72 bits at the 500-doc gate corpus, so the sizing derivation itself runs under the gate; chunk [54,72) SPANS the word boundary, keeping the multi-piece xxhash64 chunk-key branch live; zip_with popcount; word-count-generic list arithmetic on the oracle side), each against its own brute-force leg.",
+    "d04_simhash": "DuckDB brute-forces ALL C(n,2) Hamming distances over the xcheck'd signatures while Spark uses pigeonhole blocking — a blocking recall miss fails the row, not just wrong arithmetic; since r13 the row carries BOTH the classic 63-bit scalar path and the AUTO-SIZED wide path (recommended_simhash_bits(corpus_count) = 72 bits at the 500-doc gate corpus, so the sizing derivation itself runs under the gate; chunk [54,72) SPANS the word boundary, keeping the multi-piece xxhash64 chunk-key branch live; per-word popcount sum; word-count-generic list arithmetic on the oracle side), each against its own brute-force leg.",
     "d05_dup_clusters": "Per-cluster member counts and max member id pin transitive connected-component closure — one missed union splits a cluster and changes two rows.",
     # similarity
     "s01_cosine_topk": "Per-query ranked top-5: neighbor ids, 4dp cosines, and ranks pin dot/norm arithmetic and the deterministic (rounded-sim, id) tie-break.",

@@ -67,3 +67,24 @@ def test_unpersist_on_gc_releases_only_on_drop(spark):
     del out
     gc.collect()
     assert not base.storageLevel.useMemory
+
+
+def test_d02_cache_lives_while_derived_result_referenced(spark, sf_dir):
+    """The other half of the contract, for a DERIVED result: d02 returns
+    an orderBy frame built on ngram_jaccard_pairs' lazy wrapper, and the
+    shingle cache is tied to that wrapper, which only the derived frame's
+    ``_score_spark_keepalive`` attribute keeps alive (unpersist_on_gc rests
+    on CPython refcounting). While the consumer holds the result, a full GC
+    must not release the cache; dropping the result must."""
+    from score_spark.queries import QUERIES
+
+    gc.collect()
+    before = _live_persistent_rdd_ids(spark)
+    df = QUERIES["d02_ngram_jaccard"](spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    gc.collect()
+    live = _live_persistent_rdd_ids(spark) - before
+    assert live, "d02's shingle cache was released while its result is still referenced"
+    del df
+    gc.collect()
+    assert not live & _live_persistent_rdd_ids(spark)

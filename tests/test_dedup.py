@@ -390,7 +390,7 @@ def test_hamming_pairs_wide_full_recall_planted(spark):
     distance, every pair beyond it must not."""
     import random
 
-    from score_spark.operators.dedup import _hamming_pairs_wide
+    from score_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(12)
 
@@ -413,7 +413,7 @@ def test_hamming_pairs_wide_full_recall_planted(spark):
     for max_h in (1, 3, 5):
         got = {
             (r.d1, r.d2): r.hamming
-            for r in _hamming_pairs_wide(df, max_h, "doc_id", "simhash").collect()
+            for r in hamming_pairs(df, max_h, "doc_id", "simhash").collect()
         }
         want = {}
         for (i, a), (j, b) in itertools.combinations(rows, 2):
@@ -460,7 +460,7 @@ def test_hamming_pairs_wide_explicit_n_bits_152(spark):
     import itertools
     import random
 
-    from score_spark.operators.dedup import _hamming_pairs_wide
+    from score_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(5)
 
@@ -481,7 +481,7 @@ def test_hamming_pairs_wide_explicit_n_bits_152(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, simhash array<bigint>")
     got = {
         (r.d1, r.d2): r.hamming
-        for r in _hamming_pairs_wide(df, 3, "doc_id", "simhash", n_bits=152).collect()
+        for r in hamming_pairs(df, 3, "doc_id", "simhash", n_bits=152).collect()
     }
     want = {}
     for (i, a), (j, b) in itertools.combinations(rows, 2):
@@ -498,7 +498,7 @@ def test_hamming_pairs_wide_explicit_n_bits_152(spark):
 
     for bad in (126, 60, 200):
         with _pytest.raises(Exception, match="inconsistent with signature width"):
-            _hamming_pairs_wide(df, 3, "doc_id", "simhash", n_bits=bad).collect()
+            hamming_pairs(df, 3, "doc_id", "simhash", n_bits=bad).collect()
 
 
 from hypothesis import HealthCheck, given, settings
@@ -519,7 +519,7 @@ def test_hamming_pairs_wide_matches_bruteforce_property(spark, data):
     filter (no pair beyond it kept), including boundary-spanning chunks."""
     import itertools
 
-    from score_spark.operators.dedup import _hamming_pairs_wide
+    from score_spark.operators.dedup import hamming_pairs
 
     rng = data.draw(st.randoms(use_true_random=False))
     n_words = data.draw(st.integers(min_value=2, max_value=4))
@@ -556,7 +556,7 @@ def test_hamming_pairs_wide_matches_bruteforce_property(spark, data):
     df = spark.createDataFrame(rows, "doc_id bigint, simhash array<bigint>")
     got = {
         (r.d1, r.d2): r.hamming
-        for r in _hamming_pairs_wide(df, max_h, "doc_id", "simhash", n_bits=n_bits).collect()
+        for r in hamming_pairs(df, max_h, "doc_id", "simhash", n_bits=n_bits).collect()
     }
     want = {}
     for (i, a), (j, b) in itertools.combinations(rows, 2):
@@ -596,15 +596,15 @@ def test_hamming_pairs_sized_scalar_width_matches_brute_force(spark):
 def test_scalar_chunk_exprs_partition_real_width_only():
     """Sized partitions must never shift past the declared width: 4 chunks
     over 32 bits start at 0/8/16/24, not 0/16/32/48."""
-    from score_spark.operators.dedup import _scalar_chunk_exprs
+    from score_spark.operators.dedup import _chunk_keys
 
-    exprs = _scalar_chunk_exprs("s", 4, 32)
+    exprs = _chunk_keys("s", 32, 4, 64)
     assert "shiftrightunsigned(`s`, 24)" in exprs[-1]
     for e in exprs:
         for tok in e.split("shiftrightunsigned(`s`, ")[1:]:
             assert int(tok.split(")")[0]) < 32
     # default stays the legacy full-64-bit layout (d04 gate keys unchanged)
-    legacy = _scalar_chunk_exprs("s", 4)
+    legacy = _chunk_keys("s", 64, 4, 64)
     assert "shiftrightunsigned(`s`, 48)" in legacy[-1]
 
 
@@ -674,14 +674,108 @@ def test_d04_auto_width_spans_word():
     exactly on 63), this fails the suite rather than silently demoting the
     gate row to single-piece keys."""
     from score_spark.operators.dedup import (
-        _wide_chunk_exprs,
+        _chunk_keys,
         recommended_simhash_bits,
     )
 
     for n_docs, want_bits in ((500, 72), (5000, 100), (50000, 128)):
         bits = max(64, recommended_simhash_bits(n_docs, max_hamming=3))
         assert bits == want_bits, (n_docs, bits)
-        exprs = _wide_chunk_exprs("simhash", bits, 4)
+        exprs = _chunk_keys("simhash", bits, 4, 63)
         assert any("xxhash64(" in e for e in exprs), (n_docs, bits, exprs)
     # the degenerate-sweep floor also spans (chunk [48,64) crosses bit 63)
-    assert any("xxhash64(" in e for e in _wide_chunk_exprs("simhash", 64, 4))
+    assert any("xxhash64(" in e for e in _chunk_keys("simhash", 64, 4, 63))
+
+
+def _tree(node):
+    """Pre-order walk of a JVM Catalyst tree (plan or expression)."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        ch = n.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def _minhash_case(spark):
+    from score_spark.operators.dedup import minhash_lsh_pairs
+
+    a = list(range(100, 116))
+    # doc 3 differs from docs 1/2 in bands 0-5 (2 rows per band), so it
+    # collides with them in bands 6 and 7 only: agreement 4/16
+    c = [-x if i < 12 else x for i, x in enumerate(a)]
+    sigs = spark.createDataFrame(
+        [(1, a), (2, a), (3, c), (4, [-x - 1000 for x in a])], "doc_id long, sig array<long>"
+    )
+    out = minhash_lsh_pairs(None, n_hashes=16, bands=8, sigs=sigs)
+    return out, {(1, 2): 1.0, (1, 3): 0.25, (2, 3): 0.25}
+
+
+def _hamming_long_case(spark):
+    from score_spark.operators.dedup import hamming_pairs
+
+    x = 0x2B3C4D5E6F708192
+    df = spark.createDataFrame(
+        [(1, x), (2, x), (3, x ^ 1), (4, ~x)], "doc_id long, simhash long"
+    )
+    return hamming_pairs(df, max_hamming=3), {(1, 2): 0, (1, 3): 1, (2, 3): 1}
+
+
+def _hamming_array_case(spark):
+    from score_spark.operators.dedup import hamming_pairs
+
+    w = [0x1B3C4D5E6F708192, 0x3456789]
+    df = spark.createDataFrame(
+        [(1, w), (2, w), (3, [w[0] ^ 1, w[1]]), (4, [w[0] ^ ((1 << 63) - 1), w[1] ^ 0xFFFFFFF])],
+        "doc_id long, simhash array<long>",
+    )
+    return hamming_pairs(df, max_hamming=3, n_bits=100), {(1, 2): 0, (1, 3): 1, (2, 3): 1}
+
+
+def _lsh_case(spark):
+    from score_spark.operators.similarity import lsh_pair_candidates
+
+    v = [0.3, -1.2, 0.7, 2.0, -0.4, 1.1, -0.9, 0.5]
+    emb = spark.createDataFrame(
+        [(1, v), (2, v), (3, [-x for x in v])], "vec_id long, embedding array<double>"
+    )
+    out = lsh_pair_candidates(emb, n_tables=4, n_planes=4, dim=8)
+    return out.withColumnRenamed("v1", "d1").withColumnRenamed("v2", "d2"), {(1, 2): None}
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_minhash_case, _hamming_long_case, _hamming_array_case, _lsh_case],
+    ids=["minhash", "hamming_long", "hamming_array", "lsh"],
+)
+def test_band_pairs_kernel_contract(spark, case):
+    """Every blocking pair miner runs on ``band_pairs``, and the kernel's
+    contract holds for each: a pair colliding in several bands comes out
+    ONCE (identical rows collide in every band); the dedup Aggregate sees
+    only the ids and the score, never the payload (signatures/vectors); and
+    the bucket keys are exploded inline, so Spark infers no
+    ``size(keys) > 0`` filter below the Generate — that inferred filter,
+    pushed below a projected key column, re-evaluates the whole upstream
+    signature expression (for d04, the SimHash aggregate) a second time."""
+    out, want = case(spark)
+    rows = out.collect()
+    got = {(r[0], r[1]): (r[2] if len(r) > 2 else None) for r in rows}
+    assert len(rows) == len(got), f"duplicate pairs: {rows}"
+    assert got == want
+
+    plan = out._jdf.queryExecution().optimizedPlan()
+    dedup = next(n for n in _tree(plan) if n.nodeName() == "Aggregate")
+    child = dedup.child().output()
+    fed = {child.apply(i).name() for i in range(child.size())}
+    assert not fed & {"_p", "sig", "simhash", "embedding"}, fed
+    assert len(fed) == len(out.columns), fed
+
+    gens = [n for n in _tree(plan) if n.nodeName() == "Generate"]
+    assert len(gens) == 2  # one per self-join side
+    for g in gens:
+        for f in (n for n in _tree(g) if n.nodeName() == "Filter"):
+            for e in _tree(f.condition()):
+                assert not (
+                    e.nodeName() == "GreaterThan" and e.children().apply(0).nodeName() == "Size"
+                ), f"inferred size() > 0 filter below Generate: {f.condition().sql()}"

@@ -11,8 +11,8 @@ BOTH widths at the 500k-doc corpus the law was measured at and reports:
 
   - bucket-occupancy compare volume: sum over (chunk, bucket) of C(cnt, 2),
     computed with the EXACT production chunk-key expressions
-    (dedup._scalar_chunk_exprs / _wide_chunk_exprs) — the direct count of
-    candidate pairs the join must popcount;
+    (dedup._chunk_keys) — the direct count of candidate pairs the join
+    must popcount;
   - wall + executor CPU for the full pairs pipeline (signature + join +
     exact filter), best of N;
   - planted recall: gen_documents plants an exact duplicate every 50 ids —
@@ -79,8 +79,7 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     analytic_fixed = len(sys.argv) > 3 and sys.argv[3] == "analytic_fixed"
     from score_spark.operators.dedup import (
-        _scalar_chunk_exprs,
-        _wide_chunk_exprs,
+        _chunk_keys,
         hamming_pairs,
         recommended_simhash_bits,
         simhash,
@@ -102,10 +101,12 @@ def main() -> None:
 
     for name, bits in arms.items():
         sigs = simhash(docs, n_bits=bits).localCheckpoint(eager=True)
+        # the fixed arm's long signature runs with n_bits=None: the full
+        # 64-bit partition
         exprs = (
-            _scalar_chunk_exprs("simhash", 4)
+            _chunk_keys("simhash", 64, 4, 64)
             if bits <= 63
-            else _wide_chunk_exprs("simhash", bits, 4)
+            else _chunk_keys("simhash", bits, 4, 63)
         )
         vol = compare_volume(spark, sigs, exprs)
         if analytic_fixed and bits <= 63:

@@ -120,7 +120,7 @@ def d02abab() -> None:
 def d04skew() -> None:
     from score_spark.io import load_table
     from score_spark.operators.dedup import (
-        _wide_chunk_exprs,
+        _chunk_keys,
         recommended_simhash_bits,
         simhash,
     )
@@ -134,7 +134,7 @@ def d04skew() -> None:
     sigs.count()
     chunk_structs = ", ".join(
         f"named_struct('chunk_id', {c}, 'chunk', {e})"
-        for c, e in enumerate(_wide_chunk_exprs("simhash", bits, 4))
+        for c, e in enumerate(_chunk_keys("simhash", bits, 4, 63))
     )
     chunks = sigs.select(F.expr(f"explode(array({chunk_structs}))").alias("cc")).select(
         "cc.chunk_id", "cc.chunk"
