@@ -30,6 +30,7 @@ linking across branches, Expand (rollup/cube) projections.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -37,6 +38,7 @@ from concurrent.futures import wait as futures_wait
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, types as T
 
 from score_spark.schema_on_read.plan_json import Node, build_tree, cls_name, expr_id, expr_trees
@@ -212,6 +214,8 @@ def _norm_path(p: str) -> str:
 # with sameResult() so hash collisions can't cross-wire two queries
 _GENERATE_CACHE: dict[int, tuple[Any, "SchemaOnRead"]] = {}
 
+_log = logging.getLogger(__name__)
+
 # single long-lived worker for the whole-plan toJSON overlap in generate():
 # one thread so there is exactly ONE extra py4j connection for the process,
 # created lazily and reused (see the generate() comment). Created PER
@@ -222,11 +226,37 @@ _PLAN_JSON_POOL: ThreadPoolExecutor | None = None
 _PLAN_JSON_POOL_PID: int | None = None
 
 
+def _jvm_socket():
+    """The JVM end of the calling thread's own py4j connection (PySpark's
+    default pinned-thread mode gives every Python thread one)."""
+    server = SparkContext._gateway.java_gateway_server
+    return server.getCallbackClient().getPerThreadConnection().getSocket()
+
+
+def _jvm_nodelay() -> None:
+    """Pool initializer: turn off Nagle on the worker's JVM socket.
+
+    py4j sets no TCP_NODELAY on either end, and the JVM writes a reply
+    through an 8 KB BufferedWriter. A plan-JSON reply over 8 KB leaves in
+    more than one segment, and Nagle holds the tail back until Python's
+    delayed ACK arrives: 43-50 ms added to a toJSON that otherwise takes a
+    few ms (BASELINE.md "Analyzer budget", re-measure 2026-10). A failure
+    here (e.g. no per-thread connection with PYSPARK_PIN_THREAD=false) must
+    not raise: a raising initializer breaks the pool, and every later
+    generate() would fall back to full schemas."""
+    try:
+        _jvm_socket().setTcpNoDelay(True)
+    except Exception as e:
+        _log.warning("plan-JSON py4j socket keeps Nagle on: %s: %s", type(e).__name__, e)
+
+
 def _plan_json_pool() -> ThreadPoolExecutor:
     global _PLAN_JSON_POOL, _PLAN_JSON_POOL_PID
     pid = os.getpid()
     if _PLAN_JSON_POOL is None or _PLAN_JSON_POOL_PID != pid:
-        _PLAN_JSON_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="sor-plan-json")
+        _PLAN_JSON_POOL = ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix="sor-plan-json", initializer=_jvm_nodelay
+        )
         _PLAN_JSON_POOL_PID = pid
     return _PLAN_JSON_POOL
 
@@ -239,6 +269,9 @@ class SchemaOnRead:
     def __init__(self) -> None:
         self._state = _State()
         self._failed = False
+        # why generate() fell back to full schemas ("Type: message"), None
+        # when the analysis succeeded
+        self.error: str | None = None
         self.duration: float = 0.0
         # relations living inside subquery-expression plans, keyed by the
         # frozenset of their output (jvmId, id) exprIds — order-independent
@@ -257,11 +290,11 @@ class SchemaOnRead:
             jplan = df._jdf.queryExecution().analyzed()
             # memoized per structurally-equal plan: repeat analysis of the
             # same query (the production pattern — derive the read schema
-            # once, reuse across runs) skips the plan-JSON round-trip, whose
-            # JVM-side reflection serialization dominates warm cost (~55 ms
-            # on window-heavy plans; VERDICT r2 "Next round" #8). Exact
-            # case-class equality, NOT sameResult(): canonicalization strips
-            # SubqueryAlias nodes, which for_view() depends on.
+            # once, reuse across runs) skips the plan-JSON round-trip, the
+            # relation collectors and the walk (a cold suite plan is ~5 ms
+            # p50 with the worker's TCP_NODELAY on; a hit is under 1 ms).
+            # Exact case-class equality, NOT sameResult(): canonicalization
+            # strips SubqueryAlias nodes, which for_view() depends on.
             h = jplan.hashCode()
             hit = _GENERATE_CACHE.get(h)
             if hit is not None and hit[0].equals(jplan):
@@ -272,14 +305,18 @@ class SchemaOnRead:
             pass  # py4j hiccup: fall through to a full uncached generate
 
         self = cls()
+        relations: list[dict[str, Any] | None] = []
         try:
             # the three JVM pre-passes are independent pure reads of the
-            # analyzed plan, and the whole-plan toJSON (reflection
-            # serialization, ~49 ms on the subquery-heavy budget shape —
-            # BASELINE.md "Analyzer budget" r13) dominates the cold path.
-            # Run it on its OWN py4j thread so it overlaps the relation
-            # collectors (~27 ms combined on the same shape) instead of
-            # serializing after them: cold subquery-heavy drops ~25%.
+            # analyzed plan. Run the whole-plan toJSON on its OWN py4j
+            # thread so it overlaps the relation collectors (~27 ms combined
+            # on the subquery-heavy budget shape, BASELINE.md "Analyzer
+            # budget" r13) instead of serializing after them: cold
+            # subquery-heavy drops ~25%. Its reply is the one large py4j
+            # reply of the analysis (7-172 KB on the suite plans); the
+            # worker's socket has TCP_NODELAY on (_jvm_nodelay), without
+            # which every reply over 8 KB could stall ~43 ms on a delayed
+            # ACK.
             # PySpark's pinned-thread mode gives each Python thread its own
             # JVM thread; all three calls only read materialized state
             # (df.schema already forced analysis), so there is no shared
@@ -309,13 +346,19 @@ class SchemaOnRead:
                 if len(_GENERATE_CACHE) >= 64:
                     _GENERATE_CACHE.pop(next(iter(_GENERATE_CACHE)))
                 _GENERATE_CACHE[h] = (jplan, self)
-        except Exception:
-            # best-effort: fall back to full schemas (README.md:9). Tests set
-            # SCORE_SPARK_SOR_RAISE=1 so walker bugs can't hide behind the
-            # fallback.
+        except Exception as e:
+            # best-effort: fall back to full schemas (README.md:9), keeping
+            # the reason. Tests set SCORE_SPARK_SOR_RAISE=1 so walker bugs
+            # can't hide behind the fallback.
             if os.environ.get("SCORE_SPARK_SOR_RAISE"):
                 raise
             self._failed = True
+            self.error = f"{type(e).__name__}: {e}"
+            # relations the walk never reached still answer for_paths()
+            # with their full schema
+            for info in (*relations, *self._subq_rels.values()):
+                if info is not None:
+                    self._relation(info)
         self.duration = time.monotonic() - t0
         return self
 
@@ -511,6 +554,18 @@ class SchemaOnRead:
         if info is None:  # non-file relation (JDBC etc.) — ignore, like LocalRelation
             st.current_relation = None
             return
+        rel = self._relation(info)
+        st.current_relation = rel
+        node["_rel"] = rel
+        for out in expr_trees(node.get("output")):
+            eid = expr_id(out)
+            if eid is not None:
+                st.exprid_map.setdefault(eid, []).append(Handle(rel.trie, out["name"].lower()))
+
+    def _relation(self, info: dict[str, Any]) -> RelationInfo:
+        """The one RelationInfo of a collected file relation, created on
+        first sight."""
+        st = self._state
         ref = info["ref"]
         if not ref:
             # an empty directory yields ZERO input files: a bare () ref
@@ -533,12 +588,7 @@ class SchemaOnRead:
                 trie=TrieNode(),
             )
             st.relations[ref] = rel
-        st.current_relation = rel
-        node["_rel"] = rel
-        for out in expr_trees(node.get("output")):
-            eid = expr_id(out)
-            if eid is not None:
-                st.exprid_map.setdefault(eid, []).append(Handle(rel.trie, out["name"].lower()))
+        return rel
 
     def _on_LocalRelation(self, node: Node) -> None:
         # in-memory data is never pruned (TreeNodeProcessingRegistry.java:32-33)

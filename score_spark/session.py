@@ -29,13 +29,30 @@ def _default_shuffle_partitions(master: str, cpus: int) -> int:
     return cpus
 
 
+def _default_cpus() -> int:
+    """Cores this process may run on (its affinity mask, which a container
+    or taskset narrows below os.cpu_count())."""
+    return len(os.sched_getaffinity(0))
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(32g, half of physical RAM): a driver heap sized past the host's
+    RAM lets the JVM grow until the kernel kills it instead of failing fast
+    on its own heap limit."""
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{min(32 << 10, int(line.split()[1]) >> 11)}m"
+    raise ValueError(f"no MemTotal line in {meminfo}")
+
+
 def get_session(
     app_name: str = "score-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -116,7 +133,7 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
     )
     if jars:
         builder = builder.config("spark.jars", ",".join(jars))

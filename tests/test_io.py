@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
+from pyspark.sql import functions as F
 
 from score_spark.io import fan_out, parse_byte_size
 
@@ -107,6 +113,57 @@ def test_default_shuffle_partitions_follow_resolved_master():
     assert _default_shuffle_partitions("local[32]", 32) == 32
     assert _default_shuffle_partitions("local[*]", 32) == (os.cpu_count() or 32)
     assert _default_shuffle_partitions("spark://host:7077", 32) == 32
+
+
+def test_session_defaults_follow_the_host(monkeypatch, tmp_path):
+    """SPARK_GRAFT_CPUS defaults to the usable cores and the driver heap to
+    min(32g, half of RAM), not a fixed 32 cores / 32g. Asserted on the pure
+    helpers — a second session would need a second JVM."""
+    from score_spark.session import _default_cpus, _default_driver_memory
+
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert _default_cpus() == 3
+
+    def meminfo(text):
+        p = tmp_path / "meminfo"
+        p.write_text(text)
+        return str(p)
+
+    assert _default_driver_memory(meminfo("MemFree: 1 kB\nMemTotal: 15728640 kB\n")) == "7680m"
+    assert _default_driver_memory(meminfo("MemTotal: 268435456 kB\n")) == "32768m"  # capped at 32g
+    with pytest.raises(ValueError):
+        _default_driver_memory(meminfo("MemFree: 1 kB\n"))
+
+
+def _shuffled_rows(spark) -> list[list[int]]:
+    df = spark.range(2000).groupBy((F.col("id") % 7).alias("k")).agg(F.sum("id").alias("s"))
+    return [list(r) for r in df.orderBy("k").collect()]
+
+
+def test_shuffle_codec_knob_reaches_the_session(spark):
+    """SPARK_GRAFT_SHUFFLE_CODEC=zstd sets spark.io.compression.codec and a
+    shuffle query returns the same rows as under the lz4 default. In a
+    subprocess because the codec is fixed when the JVM starts."""
+    script = (
+        "import json\n"
+        "from score_spark.session import get_session\n"
+        "from tests.test_io import _shuffled_rows\n"
+        "spark = get_session(master='local[2]')\n"
+        "codec = spark.sparkContext.getConf().get('spark.io.compression.codec')\n"
+        "print(json.dumps([codec, _shuffled_rows(spark)]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_SHUFFLE_CODEC="zstd", SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, cwd=repo, env=env, timeout=300
+    )
+    assert r.returncode == 0, (r.stdout + r.stderr)[-2000:]
+    codec, rows = json.loads(r.stdout.strip().splitlines()[-1])
+    assert codec == "zstd"
+    if "SPARK_GRAFT_SHUFFLE_CODEC" not in os.environ:
+        assert spark.sparkContext.getConf().get("spark.io.compression.codec") == "lz4"
+    assert rows == _shuffled_rows(spark)
+    assert len(rows) == 7
 
 
 def test_parse_byte_size_overflow_returns_default():

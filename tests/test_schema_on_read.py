@@ -1679,7 +1679,7 @@ def test_inline_field_access_through_routing_heads_is_precise(spark, fx, tmp_pat
     assert pruned["someComplexArray"].dataType.elementType.fieldNames() == ["col2"]
 
 
-def test_plan_json_pool_is_per_process(monkeypatch):
+def test_plan_json_pool_is_per_process(spark, monkeypatch):
     """r13 self-review: the toJSON overlap pool must be recreated after a
     fork — a child inheriting the parent's executor has a registered-but-
     dead worker thread, and its next submit() would hang fut.result()
@@ -1692,5 +1692,66 @@ def test_plan_json_pool_is_per_process(monkeypatch):
     p2 = G._plan_json_pool()
     assert p2 is not p1  # "forked": fresh pool with a live worker
     assert p2.submit(lambda: 42).result() == 42
+    # the fresh worker opened its own py4j connection; the initializer
+    # turned Nagle off on it too
+    assert p2.submit(lambda: G._jvm_socket().getTcpNoDelay()).result() is True
     monkeypatch.undo()
     G._plan_json_pool()  # real pid again: recreated once more, still live
+
+
+def test_plan_json_worker_socket_has_nodelay(spark, fx):
+    """The plan-JSON reply is the analyzer's one large py4j reply (7-172 KB
+    on the suite plans). Without TCP_NODELAY on the JVM end of the worker's
+    connection, a reply over 8 KB can wait ~43 ms for a delayed ACK."""
+    from score_spark.schema_on_read import generator as G
+
+    df = spark.read.parquet(fx["sample_parquet"]).select("struct.col1")
+    assert gen(df).for_paths(fx["sample_parquet"]) == st(struct_field(f("col1", LONG)))
+    assert G._plan_json_pool().submit(lambda: G._jvm_socket().getTcpNoDelay()).result() is True
+
+
+def test_plan_json_pool_survives_nodelay_failure(spark, fx, monkeypatch, caplog):
+    """A raising pool initializer marks a ThreadPoolExecutor broken, and
+    every later generate() would silently fall back to full schemas (e.g.
+    PYSPARK_PIN_THREAD=false has no per-thread connection to tune). The
+    initializer logs the failure and the pool keeps working with Nagle on."""
+    from score_spark.schema_on_read import generator as G
+
+    def no_socket():
+        raise RuntimeError("no per-thread connection")
+
+    monkeypatch.setattr(G, "_jvm_socket", no_socket)
+    monkeypatch.setattr(G, "_PLAN_JSON_POOL", None)  # fresh pool, restored after
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})  # generate() must reach the pool
+    pool = G._plan_json_pool()
+    try:
+        with caplog.at_level("WARNING", logger=G.__name__):
+            assert pool.submit(lambda: 42).result() == 42
+        assert "RuntimeError: no per-thread connection" in caplog.text
+        df = spark.read.parquet(fx["sample_parquet"]).select("nestedStruct.childStruct.col2")
+        sor = gen(df)
+        assert G._plan_json_pool() is pool
+        assert not sor._failed and sor.error is None
+        pruned = sor.for_paths(fx["sample_parquet"])
+        assert pruned["nestedStruct"].dataType["childStruct"].dataType.fieldNames() == ["col2"]
+    finally:
+        pool.shutdown()
+
+
+def test_fallback_keeps_its_reason(spark, fx, monkeypatch):
+    """generate() still falls back to full schemas on any analysis failure,
+    and now says why in ``error``."""
+    from score_spark.schema_on_read import generator as G
+
+    def broken_tree(flat):
+        raise RuntimeError("plan JSON unreadable")
+
+    monkeypatch.delenv("SCORE_SPARK_SOR_RAISE", raising=False)
+    monkeypatch.setattr(G, "build_tree", broken_tree)
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    path = fx["sample_parquet"]
+    full = spark.read.parquet(path)
+    sor = SchemaOnRead.generate(full.select("struct.col1"))
+    assert sor._failed
+    assert sor.error == "RuntimeError: plan JSON unreadable"
+    assert sor.for_paths(path) == full.schema
