@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: run the full query surface at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], print ONE JSON
-line with per-query wall-clock.
+line with per-query wall-clock. An unset $SPARK_GRAFT_CPUS means the host
+cores this process may run on.
 
 Execution is forced with the noop sink (full pipeline runs, nothing
 collected), which is the honest cluster-shaped measurement: no driver
@@ -19,11 +20,14 @@ import time
 
 # 1-min loadavg above which a run is auto-marked invalid in
 # BENCH_HISTORY.jsonl (VERDICT r12 #1): same-code ratios swung 1.16-1.86 in
-# one day on this host, and runs started right after an 18-min pytest pass
-# (load ~7, draining slowly) were the documented contamination source. Idle
-# starts measure < ~1; 4.0 is far above idle and far below the post-pytest
-# regime, so the flag fires exactly on the runs a human used to hand-mark.
+# one day on a 32-core host, and runs started right after an 18-min pytest
+# pass (load ~7, draining slowly) were the documented contamination source.
+# Idle starts measure < ~1; 4.0 is far above idle and far below the
+# post-pytest regime there. The cap scales down with the host: the same
+# external load is a larger share of fewer cores, so the threshold is
+# min(4.0, LOAD_INVALID_PER_CORE x host cores) — 4.0 on 32 cores, 0.5 on 4.
 LOAD_INVALID_THRESHOLD = 4.0
+LOAD_INVALID_PER_CORE = 0.125
 
 
 def _cpu_stat() -> tuple[int, int] | None:
@@ -59,14 +63,21 @@ def _steal_pct(start: tuple[int, int] | None, end: tuple[int, int] | None) -> fl
 STEAL_INVALID_THRESHOLD = 2.0
 
 
-def _run_invalid(load1: float | None, steal_pct: float | None) -> str | None:
+def _run_invalid(
+    load1: float | None, steal_pct: float | None, cpus_host: int | None = None
+) -> str | None:
     """ONE definition of 'this run is contaminated' (r13 self-review: the
     median-window exclusion and the history-line stamp must never
     desynchronize), returning the reason or None. Load is measured at run
-    START (external queue pressure the run inherits); steal is measured
-    OVER the run (hypervisor contention loadavg cannot see)."""
-    if load1 is not None and load1 > LOAD_INVALID_THRESHOLD:
-        return f"load1_start {load1} > {LOAD_INVALID_THRESHOLD} (auto: started under load)"
+    START (external queue pressure the run inherits) against a per-core
+    threshold that never exceeds LOAD_INVALID_THRESHOLD (an unknown core
+    count gets the cap); steal is measured OVER the run (hypervisor
+    contention loadavg cannot see)."""
+    load_max = LOAD_INVALID_THRESHOLD
+    if cpus_host:
+        load_max = min(load_max, LOAD_INVALID_PER_CORE * cpus_host)
+    if load1 is not None and load1 > load_max:
+        return f"load1_start {load1} > {load_max} (auto: started under load)"
     if steal_pct is not None and steal_pct > STEAL_INVALID_THRESHOLD:
         return (
             f"steal_pct {steal_pct} > {STEAL_INVALID_THRESHOLD} "
@@ -82,9 +93,12 @@ def _resolve_cpus() -> str:
     reduced-core probe (cpus_run != cpus_host) and silently exempted from
     both the 2x gate and the trailing-median window — the perf gate could
     never fire again there. An unset env var means "this host", so the
-    default follows the host. The driver always sets the var explicitly,
-    so its runs are unaffected."""
-    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 32)
+    default follows the host — the same affinity-mask count get_session()
+    uses. The driver always sets the var explicitly, so its runs are
+    unaffected."""
+    from score_spark.session import _default_cpus
+
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(_default_cpus())
 
 
 def main() -> None:
@@ -103,8 +117,9 @@ def main() -> None:
         sf = None
 
     from score_spark.queries import QUERIES
-    from score_spark.session import get_session
+    from score_spark.session import _default_cpus, get_session
 
+    cpus_host = _default_cpus()
     spark = get_session(app_name="score-spark-bench", master=f"local[{cpus}]")
     # JVM/codegen + Python-worker-pool warmup outside the timed region (the
     # first pandas-UDF query otherwise pays ~5 s of worker forking that has
@@ -298,12 +313,12 @@ def main() -> None:
     # (including this one), not the single-run number.
     ratio_now = (baseline_summary or {}).get("spark_vs_duckdb_ratio")
     steal_now = _steal_pct(cpu_stat_start, _cpu_stat())
-    run_invalid = _run_invalid(load1_start, steal_now)
+    run_invalid = _run_invalid(load1_start, steal_now, cpus_host)
     # the driver also runs the bench at REDUCED core counts to measure
     # scaling; those runs time the same code on fewer cores and must not
     # enter the full-core gate trajectory (found live: a local[8] probe
     # appended ratio 1.34 and moved the median 1.22 -> 1.27)
-    full_core_run = int(cpus) == (os.cpu_count() or int(cpus))
+    full_core_run = int(cpus) == cpus_host
     trailing_median = None
     if sf == 0.1 and ratio_now is not None:
         # a contaminated current run (external load at start, or hypervisor
@@ -323,7 +338,7 @@ def main() -> None:
         "leg_times": leg_times,
         "load1_start": load1_start,
         "steal_pct": steal_now,
-        "cpus_host": os.cpu_count(),
+        "cpus_host": cpus_host,
         "cpus_run": int(cpus),
         "oracle_channel_sec": oracle_channel,
         "floor_sec": floor_sec,
@@ -378,7 +393,9 @@ def _compact_line(result: dict) -> str:
     # the round driver keeps ONLY this line (BENCH_rN.json); without the
     # invalid marker a steal-contaminated round-end run is indistinguishable
     # from a clean sample there, even though the committed history flags it
-    reason = _run_invalid(result.get("load1_start"), result.get("steal_pct"))
+    reason = _run_invalid(
+        result.get("load1_start"), result.get("steal_pct"), result.get("cpus_host")
+    )
     if reason is not None:
         line["invalid"] = reason
     return json.dumps(line, separators=(",", ":"))
@@ -449,7 +466,9 @@ def _history_line(result: dict) -> dict:
         "cpus_run": result.get("cpus_run"),
         "ts": __import__("datetime").datetime.now().isoformat(timespec="seconds"),
     }
-    reason = _run_invalid(result.get("load1_start"), result.get("steal_pct"))
+    reason = _run_invalid(
+        result.get("load1_start"), result.get("steal_pct"), result.get("cpus_host")
+    )
     if reason is not None:
         line["invalid"] = reason
     return line

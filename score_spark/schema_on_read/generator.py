@@ -920,9 +920,16 @@ class SchemaOnRead:
         if cname in _BRANCH_VALUE_EXPRS:
             return self._walk_branch_value(expr, child_mode)
         if cname == "CreateNamedStruct":
-            return self._walk_struct_ctor(expr, child_mode)
+            # children alternate Literal(name) / value
+            ch = expr["_children"]
+            pairs = [(ch[i].get("value"), ch[i + 1]) for i in range(0, len(ch) - 1, 2)]
+            return self._walk_struct_synth(pairs, child_mode)
         if cname == "ArraysZip":
-            return self._walk_arrays_zip(expr, child_mode)
+            # zip names ride in the parallel `names` Literal field; a names
+            # list shorter than the children leaves the rest unnamed
+            names = [t.get("value") for t in expr_trees(expr.get("names"))]
+            pairs = [(names[i] if i < len(names) else None, c) for i, c in enumerate(expr["_children"])]
+            return self._walk_struct_synth(pairs, child_mode)
         if cname == "With":
             # Spark 4 common-expression binding (nullif/ifnull/... lower to
             # With(child, defs) with CommonExpressionRef leaves): the refs'
@@ -1041,12 +1048,15 @@ class SchemaOnRead:
                 self._state.setop_groups.append(bucket)
         return out
 
-    def _walk_struct_ctor(self, expr: Node, mode: str) -> list[Handle]:
-        """CreateNamedStruct — struct()/named_struct (r11 probe find, the
-        alias-binding class): children alternate Literal(name) / value.
-        The generic last-child walk bound `struct(s1, n) AS s2` to n only:
-        `SELECT s2` silently returned Row() for s1 (whole-alias require
-        landed on the last value), and `SELECT s2.inner.col1` crashed
+    def _walk_struct_synth(self, pairs: list[tuple[Any, Node]], mode: str) -> list[Handle]:
+        """A CONSTRUCTED struct over (field name, value expression) pairs:
+        CreateNamedStruct — struct()/named_struct — and ArraysZip, whose
+        result is array<struct<name_i: element_i>> over the argument
+        arrays' element streams (array transparency makes each array's
+        node the element handle). r11 probe finds, the alias-binding
+        class: the generic last-child walk bound `struct(s1, n) AS s2` to
+        n only — `SELECT s2` silently returned Row() for s1, and
+        `SELECT s2.inner.col1` / `arrays_zip(ca, sa)[0].a.f` crashed
         FIELD_NOT_FOUND (descend by the CONSTRUCTED name touched a bogus
         child of the last value's node).
 
@@ -1057,51 +1067,19 @@ class SchemaOnRead:
         constructed value fans to every mapped value's full subtree.
         Literal values map nothing (they need no source data); multi-handle
         values fan through a FanNode."""
-        ch = expr["_children"]
         synth = StructSynthNode()
-        for i in range(0, len(ch) - 1, 2):
-            nm = ch[i].get("value")
-            got = self._walk_expr(ch[i + 1], mode)
+        for nm, value in pairs:
+            got = self._walk_expr(value, mode)
             if not got:
                 continue
             if not isinstance(nm, str):
-                # unmappable field name (non-string literal) but the value
-                # resolved to real source paths: the synth can't route to it,
-                # so a later whole-value require would fan over mapped
-                # children only and silently under-keep this source — keep
-                # it fully instead, matching the over-keep contract
-                # everywhere else (ADVICE r11)
-                self._walk_expr(ch[i + 1], "require")
-                continue
-            nodes = [h.materialize() for h in got]
-            synth.children[nm.lower()] = nodes[0] if len(nodes) == 1 else FanNode(members=nodes)
-        if mode == "require":
-            synth.require()
-        return [Handle(synth)]
-
-    def _walk_arrays_zip(self, expr: Node, mode: str) -> list[Handle]:
-        """arrays_zip (r11 probe find): the result is array<struct<name_i:
-        element_i>> — a CONSTRUCTED struct over the argument arrays'
-        element streams. The generic last-child walk crashed
-        FIELD_NOT_FOUND on `arrays_zip(ca, sa)[0].a.f` (descend by the zip
-        name touched a bogus child of the LAST array's node). Same cure as
-        CreateNamedStruct: a StructSynthNode maps each zip name (the
-        parallel `names` Literal field) to its array's trie node — array
-        transparency makes that node the element handle, so z[i].a.f
-        narrows the right source array to exactly f."""
-        names = [t.get("value") for t in expr_trees(expr.get("names"))]
-        synth = StructSynthNode()
-        for i, c in enumerate(expr["_children"]):
-            got = self._walk_expr(c, mode)
-            nm = names[i] if i < len(names) else None
-            if not got:
-                continue
-            if not isinstance(nm, str):
-                # names list shorter than children / non-string name: the
-                # synth can't route to this array, so keep its source fully
-                # rather than dropping it from later whole-value requires
-                # (ADVICE r11 — the silent-under-keep class)
-                self._walk_expr(c, "require")
+                # unmappable field name (non-string literal, or a zip child
+                # past the names list) but the value resolved to real source
+                # paths: the synth can't route to it, so a later whole-value
+                # require would fan over mapped children only and silently
+                # under-keep this source — keep it fully instead, matching
+                # the over-keep contract everywhere else (ADVICE r11)
+                self._walk_expr(value, "require")
                 continue
             nodes = [h.materialize() for h in got]
             synth.children[nm.lower()] = nodes[0] if len(nodes) == 1 else FanNode(members=nodes)

@@ -567,7 +567,7 @@ def test_struct_ctor_unmappable_name_over_keeps():
         "num-children": 2,
         "_children": [_synth_lit(7), _synth_attr(1)],
     }
-    gen._walk_struct_ctor(expr, "touch")
+    gen._walk_expr(expr, "touch")
     assert node.required
     # control: a proper string name stays routable and prunable
     gen2 = SchemaOnRead()
@@ -578,27 +578,35 @@ def test_struct_ctor_unmappable_name_over_keeps():
         "num-children": 2,
         "_children": [_synth_lit("f"), _synth_attr(1)],
     }
-    (h,) = gen2._walk_struct_ctor(ok, "touch")
+    (h,) = gen2._walk_expr(ok, "touch")
     assert not n2.required
     assert h.materialize().children["f"] is n2
 
 
 def test_arrays_zip_unmapped_name_over_keeps():
     """Same class for ArraysZip: names list shorter than children must
-    require the unmapped child's handles, not drop them."""
+    require the unmapped child's handles, not drop them — both in the
+    constructed-struct walker (an unnamed pair) and through the ArraysZip
+    pairing that feeds it."""
     from score_spark.schema_on_read.trie import Handle, TrieNode
 
     gen = SchemaOnRead()
     node = TrieNode()
     gen._state.exprid_map[("t", 1)] = [Handle(node)]
+    gen._walk_struct_synth([(None, _synth_attr(1))], "touch")
+    assert node.required
+
+    gen2 = SchemaOnRead()
+    n2 = TrieNode()
+    gen2._state.exprid_map[("t", 1)] = [Handle(n2)]
     expr = {
         "class": "ArraysZip",
         "names": [],
         "num-children": 1,
         "_children": [_synth_attr(1)],
     }
-    gen._walk_arrays_zip(expr, "touch")
-    assert node.required
+    gen2._walk_expr(expr, "touch")
+    assert n2.required
 
 
 def test_hof_lambda_bindings_scoped_to_body_walk():

@@ -137,20 +137,22 @@ def test_bench_resolve_cpus_defaults_to_host(monkeypatch):
     """An unset $SPARK_GRAFT_CPUS must resolve to the HOST core count, not a
     literal 32 (ADVICE r13): on a non-32-core host the literal default made
     every unconfigured run a "reduced-core probe" (cpus_run != cpus_host),
-    silently exempting it from the 2x gate and the median window forever."""
-    import os
+    silently exempting it from the 2x gate and the median window forever.
+    The host count is the session factory's (the affinity mask), so the
+    bench's master and get_session()'s default can never disagree."""
     import sys
 
     sys.path.insert(0, REPO_ROOT)
     import bench
+    from score_spark.session import _default_cpus
 
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert bench._resolve_cpus() == str(os.cpu_count() or 32)
+    assert bench._resolve_cpus() == str(_default_cpus())
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert bench._resolve_cpus() == "8"
     # empty string counts as unset, not as a literal core count
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
-    assert bench._resolve_cpus() == str(os.cpu_count() or 32)
+    assert bench._resolve_cpus() == str(_default_cpus())
 
 
 def test_bench_compact_stdout_line_fits_driver_tail_buffer():
@@ -402,6 +404,14 @@ def test_bench_history_load_auto_invalidation(tmp_path):
 
     unknown = bench._history_line({**base, "load1_start": None})
     assert "invalid" not in unknown  # no loadavg reading: don't invent one
+
+    # the threshold is min(4.0, 0.125 x host cores): the same external load
+    # is a larger share of fewer cores, so a 4-core host gates at 0.5, and
+    # more cores never lift it past 4.0
+    few = {**base, "cpus_host": 4}
+    assert "load1_start 0.6 > 0.5" in bench._history_line({**few, "load1_start": 0.6})["invalid"]
+    assert "invalid" not in bench._history_line({**few, "load1_start": 0.4})
+    assert "load1_start 4.5 > 4.0" in bench._run_invalid(4.5, None, 128)
 
     # the reader skips the auto-marked line exactly like hand-marked ones
     import json

@@ -4,6 +4,9 @@ one-round evidence — a regression in either must turn the suite red."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
 import os
 import subprocess
 import sys
@@ -31,3 +34,81 @@ def test_all_gated_queries_run_on_empty_tables():
     )
     tail = (r.stdout + r.stderr)[-2000:]
     assert r.returncode == 0, tail
+
+
+def _top_level_names(path: str) -> set[str]:
+    """Names a module binds at top level (defs, classes, assignments,
+    imports), including inside top-level if/try/with blocks."""
+    names: set[str] = set()
+
+    def visit(body):
+        for node in body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names.add(node.name)
+                continue
+            if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names.update((a.asname or a.name).split(".")[0] for a in node.names)
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                visit(getattr(node, field, []))
+
+    with open(path) as f:
+        visit(ast.parse(f.read(), path).body)
+    return names
+
+
+def _repo_file(module: str) -> str | None:
+    """The in-repo source file of a non-library module the tools import:
+    tools.X / tests.X / a root module (bench, __spark_entry__) / a bare
+    sibling tool (the tools put their own directory on sys.path)."""
+    rel = module.replace(".", os.sep) + ".py"
+    for cand in (rel, os.path.join("tools", rel)):
+        if os.path.isfile(os.path.join(_REPO, cand)):
+            return os.path.join(_REPO, cand)
+    return None
+
+
+def test_tool_imports_resolve():
+    """Every in-repo name a tool imports must still exist. The tools are
+    parsed, never executed (some run Spark at import), so a tool still
+    importing a helper the package has since removed fails here instead of
+    at its next hand run."""
+    broken = []
+    for path in sorted(glob.glob(os.path.join(_REPO, "tools", "*.py"))):
+        tool = os.path.basename(path)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                imports = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+                imports = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in imports:
+                top = module.split(".")[0]
+                if top == "score_spark":
+                    try:
+                        mod = importlib.import_module(module)
+                    except ImportError as e:
+                        broken.append(f"{tool}:{node.lineno} {module}: {e}")
+                        continue
+                    if name is not None and not hasattr(mod, name):
+                        try:
+                            importlib.import_module(f"{module}.{name}")
+                        except ImportError:
+                            broken.append(f"{tool}:{node.lineno} {module} has no {name}")
+                elif top in ("tools", "tests") or _repo_file(top) is not None:
+                    if module in ("tools", "tests"):  # from tools import X
+                        if _repo_file(f"{module}.{name}") is None:
+                            broken.append(f"{tool}:{node.lineno} no module {module}.{name}")
+                        continue
+                    src = _repo_file(module)
+                    if src is None:
+                        broken.append(f"{tool}:{node.lineno} no module {module}")
+                    elif name is not None and name not in _top_level_names(src):
+                        broken.append(f"{tool}:{node.lineno} {module} has no {name}")
+    assert not broken, "\n".join(broken)

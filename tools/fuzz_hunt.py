@@ -47,7 +47,6 @@ def main() -> int:
 
     spark = get_session(
         app_name="fuzz-hunt",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
     )
     base = tempfile.mkdtemp(prefix="fuzz_hunt_")

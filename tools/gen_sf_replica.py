@@ -87,8 +87,7 @@ def main() -> None:
 
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_session(app_name="gen-sf-replica", master=f"local[{cpus}]")
+    spark = get_session(app_name="gen-sf-replica")
     import json
 
     print(json.dumps(replicate(spark, src, dst, k), indent=2))

@@ -115,17 +115,16 @@ def main() -> None:
     from score_spark.operators.pipeline import c02_hash_split
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="probe-c02-m01",
-        master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4062"},
     )
 
     def _warm(batches):
         yield from batches
 
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(_warm, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
 
     queries = {"c02_hash_split": c02_hash_split, "m01_media_pipeline": m01_media_pipeline}
     report = {"sf_dir": sf_dir, "runs": RUNS, "queries": {}}

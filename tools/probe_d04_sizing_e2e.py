@@ -87,10 +87,8 @@ def main() -> None:
     from score_spark.session import get_session
     from tools.scale_bench import gen_documents
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="probe-d04-sizing",
-        master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4063"},
     )
     docs = gen_documents(spark, n_docs).localCheckpoint(eager=True)

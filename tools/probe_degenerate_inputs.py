@@ -57,7 +57,6 @@ def main() -> int:
 
     spark = get_session(
         app_name="probe-degenerate",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
     )
     mode = sys.argv[1] if len(sys.argv) > 1 else "0"

@@ -66,12 +66,9 @@ def probe_d04(spark, out):
 
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
-    import os
-
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_session(app_name="probe-lsh-growth", master=f"local[{cpus}]")
+    spark = get_session(app_name="probe-lsh-growth")
     out: dict = {}
     if which in ("s05", "all"):
         probe_s05(spark, out)

@@ -105,17 +105,16 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="probe-q27",
-        master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4061"},
     )
 
     def _warm(batches):
         yield from batches
 
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(_warm, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
 
     arms = {"one_stage": arm_one_stage, "two_stage": arm_two_stage}
     # results must MATCH — the probe is meaningless if the arms differ

@@ -37,10 +37,9 @@ RUNS = 3
 def _session(name, extra=None):
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     conf = {"spark.ui.enabled": "true", "spark.ui.port": "4072"}
     conf.update(extra or {})
-    spark = get_session(app_name=name, master=f"local[{cpus}]", extra_conf=conf)
+    spark = get_session(app_name=name, extra_conf=conf)
     spark.read.parquet(os.path.join(_sf_dir(), "region.parquet")).count()
     return spark
 

@@ -8,10 +8,11 @@ from score_spark.session import get_session
 from score_spark.operators.similarity import near_dup_pairs_lsh, recommended_lsh_planes
 from tools.scale_bench import gen_embeddings
 
-spark = get_session(app_name="probe-s05-e2e", master="local[32]",
+spark = get_session(app_name="probe-s05-e2e",
                     extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4076"})
 def _warm(b): yield from b
-spark.range(128, numPartitions=32).mapInPandas(_warm, "id long").count()
+cpus = spark.sparkContext.defaultParallelism
+spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
 def rest(path):
     ui = spark.sparkContext.uiWebUrl; app = spark.sparkContext.applicationId
     with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{path}", timeout=10) as r:

@@ -56,17 +56,16 @@ def main() -> None:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="probe-sf1-top-rows",
-        master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4063"},
     )
 
     def _warm(batches):
         yield from batches
 
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(_warm, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
 
     try:
         load1 = round(os.getloadavg()[0], 2)

@@ -94,7 +94,6 @@ def main() -> int:
 
     spark = get_session(
         app_name="probe-time-boundaries",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
     )
     base = tempfile.mkdtemp(prefix="time_boundaries_")

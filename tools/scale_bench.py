@@ -335,17 +335,16 @@ def _deep_worker(argv: list[str]) -> None:
     docs_10x, docs_100x, embs, events, out_json, ops_csv = argv
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="score-spark-scale-deep",
-        master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4058"},
     )
 
     def _warm(batches):
         yield from batches
 
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(_warm, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
     out: dict[str, dict] = {}
     for label, docs_path in (("10x", docs_10x), (f"{DEEP_FACTOR}x", docs_100x)):
         built = ops(spark, docs_path, embs, events)
@@ -363,10 +362,8 @@ def main() -> None:
 
     from score_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_session(
         app_name="score-spark-scale",
-        master=f"local[{cpus}]",
         # the session factory disables the UI for bench cleanliness; this
         # harness needs the REST stage metrics (input/shuffle maxima)
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4057"},
@@ -375,7 +372,8 @@ def main() -> None:
     def _warm(batches):
         yield from batches
 
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(_warm, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_warm, "id long").count()
 
     parts = set(
         os.environ.get("SCORE_SPARK_SCALE_PARTS", "ops,relational,deep").split(",")
@@ -498,7 +496,7 @@ def main() -> None:
             }
 
     out = {"base_docs": BASE_DOCS, "base_vecs": BASE_VECS, "base_events": BASE_EVENTS,
-           "base_users": BASE_USERS, "factor": FACTOR, "deep_factor": DEEP_FACTOR,
+           "base_users": BASE_USERS, "cpus": cpus, "factor": FACTOR, "deep_factor": DEEP_FACTOR,
            "detail": report, "summary": summary,
            "deep_summary": deep_summary,
            "relational_detail": rel_report, "relational_summary": rel_summary}
@@ -604,7 +602,7 @@ def _write_md(out: dict) -> None:
         f"{out.get('base_events', 0) * factor}. Events and users scale TOGETHER",
         "so per-user density (session length, funnel depth, as-of run length)",
         "stays constant — real-traffic growth, not per-key state inflation.",
-        "local[32], best-of-3 per op, noop sink. s05 runs the production LSH",
+        f"local[{out['cpus']}], best-of-3 per op, noop sink. s05 runs the production LSH",
         "family (4x16 bands, threshold 0.9), not the gate-corpus family —",
         "rationale in the module docstring. w01 = session windows, w04 =",
         "stateful funnel twin, h01 = hour->day rollup with the HLL sketch",
