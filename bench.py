@@ -17,6 +17,7 @@ import statistics
 import sys
 import time
 
+_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 # 1-min loadavg above which a run is auto-marked invalid in
 # BENCH_HISTORY.jsonl (VERDICT r12 #1): same-code ratios swung 1.16-1.86 in
@@ -273,12 +274,12 @@ def main() -> None:
     # the reference's headline metric: input-bytes reduction from the pruned
     # read schema (BASELINE.md gate: ratio <= 0.5). Full report -> BYTES.json.
     bytes_summary = None
+    artifacts: dict[str, dict] = {}
     try:
         from tools.bytes_bench import run as bytes_run
 
         bytes_report = bytes_run(spark)
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BYTES.json"), "w") as f:
-            json.dump(bytes_report, f, indent=2)
+        _keep_artifact("BYTES.json", bytes_report, sf, artifacts)
         bytes_summary = {
             "max_parquet_ratio": bytes_report["max_parquet_ratio"],
             "gate_ratio_le_050": bytes_report["gate_ratio_le_050"],
@@ -302,7 +303,10 @@ def main() -> None:
     spark.stop()
     baseline_summary = None
     try:
-        baseline_summary = _duckdb_baseline(sf_dir, times, floor_sec, floor_multi_sec, multi_stage)
+        baseline_summary, baseline_report = _duckdb_baseline(
+            sf_dir, times, floor_sec, floor_multi_sec, multi_stage
+        )
+        _keep_artifact("BASELINE_DUCKDB.json", baseline_report, sf, artifacts)
     except Exception as e:
         baseline_summary = {"error": str(e)[:200]}
 
@@ -325,7 +329,7 @@ def main() -> None:
         # steal during the run) contributes NOTHING to the smoothed
         # trajectory — its line lands in the history marked invalid, and
         # its ratio must not enter the window either
-        window = [r for r in _history_ratios() if r is not None]
+        window = [r for r in _history_ratios(cpus_host) if r is not None]
         if run_invalid is None and full_core_run:
             window = window + [ratio_now]
         window = window[-3:]
@@ -347,6 +351,7 @@ def main() -> None:
         "bytes_pruning": bytes_summary,
         "duckdb_baseline": baseline_summary,
         "trailing_median_ratio_3": trailing_median,
+        "artifacts": artifacts,
     }
     # durable artifact: the driver captures stdout with a bounded buffer
     # (~2 kB tail) that truncated BENCH_r04 mid-stream and left BENCH_r09/
@@ -359,9 +364,7 @@ def main() -> None:
     print(_compact_line(result))
     sys.stdout.flush()
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"), "w"
-        ) as f:
+        with open(os.path.join(_ROOT, "BENCH_LOCAL.json"), "w") as f:
             json.dump(result, f, indent=2)
     except OSError as e:  # never lose the stdout channel to a file error
         print(f"BENCH_LOCAL.json write failed: {e}", file=sys.stderr)
@@ -415,12 +418,14 @@ def _gate_level(ratio, med) -> str | None:
     return None
 
 
-def _history_ratios(path: str | None = None) -> list:
-    """Valid gated-SF (sf0.1) ratios from BENCH_HISTORY.jsonl, in order.
-    Lines hand-marked "invalid" (contaminated by concurrent load) and
-    small-SF iteration runs are excluded — same rules the gate uses."""
+def _history_ratios(cpus_host: int, path: str | None = None) -> list:
+    """Valid gated-SF (sf0.1) ratios of full-core runs on a ``cpus_host``-core
+    host from BENCH_HISTORY.jsonl, in order. Lines hand-marked "invalid"
+    (contaminated by concurrent load), small-SF iteration runs and lines
+    stamped with another host's core count are excluded — same rules the
+    gate uses. A line without a cpus_host stamp belongs to no host."""
     if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl")
+        path = os.path.join(_ROOT, "BENCH_HISTORY.jsonl")
     ratios: list = []
     try:
         with open(path) as f:
@@ -431,13 +436,11 @@ def _history_ratios(path: str | None = None) -> list:
                     d = json.loads(ln)
                 except json.JSONDecodeError:
                     continue
-                if "invalid" in d or d.get("sf") != 0.1:
+                if "invalid" in d or d.get("sf") != 0.1 or d.get("cpus_host") != cpus_host:
                     continue
                 # reduced-core scaling probes (driver's local[N<host] runs)
-                # time the same code on fewer cores — not gate-regime lines.
-                # Legacy lines carry no cpus_run; all were full-core runs.
-                cpus_run = d.get("cpus_run")
-                if cpus_run is not None and cpus_run != (d.get("cpus_host") or cpus_run):
+                # time the same code on fewer cores — not gate-regime lines
+                if d.get("cpus_run") not in (None, cpus_host):
                     continue
                 ratios.append(d.get("ratio"))
     except OSError:
@@ -481,7 +484,7 @@ def _append_history(result: dict) -> None:
     runs' is a file the judge can read, not a README claim."""
     ratio = (result.get("duckdb_baseline") or {}).get("spark_vs_duckdb_ratio")
     line = _history_line(result)
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl")
+    path = os.path.join(_ROOT, "BENCH_HISTORY.jsonl")
     try:
         with open(path, "a") as f:
             f.write(json.dumps(line) + "\n")
@@ -512,7 +515,7 @@ def _append_history(result: dict) -> None:
                 file=sys.stderr,
             )
             return
-        window = [r for r in _history_ratios() if r is not None][-3:]
+        window = [r for r in _history_ratios(cpus_host) if r is not None][-3:]
         med = statistics.median(window) if window else None
         level = _gate_level(ratio, med)
         if level == "FAIL_SINGLE":
@@ -563,6 +566,17 @@ _BASELINE_SKIP = {
 }
 
 
+def _keep_artifact(name: str, report: dict, sf: float | None, artifacts: dict) -> None:
+    """Write a committed artifact only at the SF it describes (BYTES.json and
+    BASELINE_DUCKDB.json are sf0.1 numbers); at any other SF its report goes
+    to ``artifacts`` (BENCH_LOCAL.json) instead."""
+    if sf == 0.1:
+        with open(os.path.join(_ROOT, name), "w") as f:
+            json.dump(report, f, indent=2)
+    else:
+        artifacts[name] = report
+
+
 def _duckdb_view_pattern(sf_dir: str, table: str) -> str:
     """read_parquet target for one table: driver testdata is one file per
     table; replicated scale fixtures (tools/gen_sf_replica.py) are
@@ -578,7 +592,8 @@ def _duckdb_baseline(
     floor_sec: float,
     floor_multi_sec: float = 0.0,
     multi_stage: dict[str, bool] | None = None,
-) -> dict:
+) -> tuple[dict, dict]:
+    """(summary for the bench line, full report for BASELINE_DUCKDB.json)."""
     import duckdb
 
     from score_spark.io import TABLES
@@ -658,10 +673,6 @@ def _duckdb_baseline(
         "The floor amortizes at cluster scale, so net ratios are the design "
         "signal; at_floor rows carry none at this SF",
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE_DUCKDB.json"), "w"
-    ) as f:
-        json.dump(report, f, indent=2)
     skipped = sorted(set(spark_times) & _BASELINE_SKIP)
     return {
         "duckdb_total_sec": duck_total,
@@ -676,7 +687,7 @@ def _duckdb_baseline(
         "skipped_spark_sec": round(
             sum(spark_times[q] for q in skipped if spark_times.get(q) is not None), 3
         ),
-    }
+    }, report
 
 
 if __name__ == "__main__":

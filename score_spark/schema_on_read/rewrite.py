@@ -18,6 +18,7 @@ CPU-bound scan and an IO-bound one.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 from typing import Any
@@ -25,6 +26,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from score_spark.schema_on_read.generator import SchemaOnRead
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -62,7 +65,8 @@ def prune(
 
     Best-effort like the reference (README.md:9): any source whose pruned
     schema can't be derived is re-read with its full schema; any overall
-    failure returns the full-schema query unchanged.
+    failure returns the full-schema query unchanged. Each fallback logs one
+    warning naming the source (or the whole query) and the error.
     """
     full = {name: _read(spark, src) for name, src in sources.items()}
     df = query_fn(full)
@@ -82,9 +86,13 @@ def prune(
         try:
             schema = sor.for_paths(*src.paths())
             pruned_readers[name] = _read(spark, src, schema=schema)
-        except Exception:
+        except Exception as e:
+            _log.warning(
+                "prune: source %r read with its full schema: %s: %s", name, type(e).__name__, e
+            )
             pruned_readers[name] = full[name]
     try:
         return query_fn(pruned_readers)
-    except Exception:
+    except Exception as e:
+        _log.warning("prune: whole query kept its full-schema reads: %s: %s", type(e).__name__, e)
         return df

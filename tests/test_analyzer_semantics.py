@@ -172,6 +172,50 @@ def test_prune_never_narrows_csv_sources(spark, tmp_path):
     assert got == [(1, 10), (2, 20)], got
 
 
+def test_prune_logs_each_fallback(monkeypatch, caplog):
+    """prune() stays best-effort, but no fallback is silent: one warning per
+    source read with its full schema, one when the rebuilt query fails and
+    the full-schema query is returned, and none for CSV's deliberate full
+    read."""
+    import logging
+    from types import SimpleNamespace
+
+    from score_spark.schema_on_read import rewrite
+
+    class _Sor:
+        def for_paths(self, *paths):
+            if paths == ("bad.parquet",):
+                raise ValueError("no relation reads bad.parquet")
+            return "narrow"
+
+    monkeypatch.setattr(rewrite, "_read", lambda spark, src, schema=None: (src.path, schema))
+    monkeypatch.setattr(rewrite, "SchemaOnRead", SimpleNamespace(generate=lambda df: _Sor()))
+    built = []
+
+    def query(dfs):
+        built.append(dict(dfs))
+        if len(built) == 2:
+            raise RuntimeError("rebuilt query failed")
+        return "full-schema query"
+
+    sources = {
+        "good": rewrite.Source("good.parquet"),
+        "bad": rewrite.Source("bad.parquet"),
+        "c": rewrite.Source("c.csv", "csv"),
+    }
+    with caplog.at_level(logging.WARNING, logger=rewrite.__name__):
+        assert rewrite.prune(None, sources, query) == "full-schema query"
+    assert built[1] == {
+        "good": ("good.parquet", "narrow"),
+        "bad": ("bad.parquet", None),
+        "c": ("c.csv", None),
+    }
+    assert [r.getMessage() for r in caplog.records if r.name == rewrite.__name__] == [
+        "prune: source 'bad' read with its full schema: ValueError: no relation reads bad.parquet",
+        "prune: whole query kept its full-schema reads: RuntimeError: rebuilt query failed",
+    ]
+
+
 def test_deep_chained_plan_does_not_overflow_recursion(spark, arr_path):
     """400 stacked withColumn Projects: the recursive build_tree overflowed
     Python's recursion limit and the RecursionError was swallowed into the

@@ -102,10 +102,11 @@ def test_h01_oracle_est_normalization_is_reader_invariant(con):
 
 
 def test_bench_history_ratios_filtering(tmp_path):
-    """The r10 trailing-median gate reads only VALID sf0.1 lines: lines
-    marked invalid (contaminated by concurrent load), small-SF iteration
-    runs, blank lines, and partial lines from killed runs are all skipped,
-    in order."""
+    """The r10 trailing-median gate reads only VALID sf0.1 lines of this
+    host's core count: lines marked invalid (contaminated by concurrent
+    load), small-SF iteration runs, lines of another host (or of no host:
+    unstamped), blank lines, and partial lines from killed runs are all
+    skipped, in order."""
     import sys
 
     sys.path.insert(0, REPO_ROOT)
@@ -113,7 +114,8 @@ def test_bench_history_ratios_filtering(tmp_path):
 
     p = tmp_path / "hist.jsonl"
     p.write_text(
-        '{"ratio": 1.5, "sf": 0.1}\n'
+        '{"ratio": 1.5, "sf": 0.1}\n'          # unstamped: belongs to no host
+        '{"ratio": 1.4, "sf": 0.1, "cpus_host": 32, "cpus_run": 32}\n'
         "\n"
         '{"ratio": 9.9, "sf": 0.01}\n'          # small-SF: excluded
         '{"ratio": 3.0, "sf": 0.1, "invalid": "ran under load"}\n'  # excluded
@@ -123,14 +125,37 @@ def test_bench_history_ratios_filtering(tmp_path):
         '{"ratio": 1.34, "sf": 0.1, "cpus_host": 32, "cpus_run": 8}\n'
         # full-core line WITH the stamp: included (cpus_run == cpus_host)
         '{"ratio": 1.2, "sf": 0.1, "cpus_host": 32, "cpus_run": 32}\n'
+        # another host's full-core run: its ratio measures that host
+        '{"ratio": 1.1, "sf": 0.1, "cpus_host": 4, "cpus_run": 4}\n'
         '{"ratio": 1.8, "sf": 0.1'              # partial line: skipped
     )
-    assert bench._history_ratios(str(p)) == [1.5, 1.2]
+    assert bench._history_ratios(32, str(p)) == [1.4, 1.2]
+    assert bench._history_ratios(4, str(p)) == [1.1]
     # median-of-3 window over valid ratios + the current run
     import statistics
 
-    window = (bench._history_ratios(str(p)) + [2.5])[-3:]
-    assert statistics.median(window) == 1.5
+    window = (bench._history_ratios(32, str(p)) + [2.5])[-3:]
+    assert statistics.median(window) == 1.4
+
+
+def test_bench_committed_artifacts_written_at_sf01_only(tmp_path, monkeypatch):
+    """BYTES.json and BASELINE_DUCKDB.json are committed sf0.1 numbers: a
+    fast-iteration run at another SF must leave them alone and keep its
+    reports in BENCH_LOCAL.json instead."""
+    import json
+    import sys
+
+    sys.path.insert(0, REPO_ROOT)
+    import bench
+
+    monkeypatch.setattr(bench, "_ROOT", str(tmp_path))
+    kept: dict = {}
+    for name in ("BYTES.json", "BASELINE_DUCKDB.json"):
+        bench._keep_artifact(name, {"sf": 0.01}, 0.01, kept)
+        assert not (tmp_path / name).exists()
+    assert kept == {"BYTES.json": {"sf": 0.01}, "BASELINE_DUCKDB.json": {"sf": 0.01}}
+    bench._keep_artifact("BYTES.json", {"sf": 0.1}, 0.1, kept)
+    assert json.loads((tmp_path / "BYTES.json").read_text()) == {"sf": 0.1}
 
 
 def test_bench_resolve_cpus_defaults_to_host(monkeypatch):
@@ -422,7 +447,7 @@ def test_bench_history_load_auto_invalidation(tmp_path):
         + json.dumps({**hot, "ratio": 3.2}) + "\n"
         + json.dumps({**idle, "ratio": 1.4}) + "\n"
     )
-    assert bench._history_ratios(str(p)) == [1.5, 1.4]
+    assert bench._history_ratios(32, str(p)) == [1.5, 1.4]
 
 
 def test_bench_steal_pct():

@@ -71,16 +71,18 @@ def _repo_file(module: str) -> str | None:
     return None
 
 
+def _tool_trees():
+    for path in sorted(glob.glob(os.path.join(_REPO, "tools", "*.py"))):
+        with open(path) as f:
+            yield os.path.basename(path), ast.parse(f.read(), path)
+
+
 def test_tool_imports_resolve():
     """Every in-repo name a tool imports must still exist. The tools are
-    parsed, never executed (some run Spark at import), so a tool still
-    importing a helper the package has since removed fails here instead of
-    at its next hand run."""
+    parsed, never executed, so a tool still importing a helper the package
+    has since removed fails here instead of at its next hand run."""
     broken = []
-    for path in sorted(glob.glob(os.path.join(_REPO, "tools", "*.py"))):
-        tool = os.path.basename(path)
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
+    for tool, tree in _tool_trees():
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 imports = [(a.name, None) for a in node.names]
@@ -112,3 +114,46 @@ def test_tool_imports_resolve():
                     elif name is not None and name not in _top_level_names(src):
                         broken.append(f"{tool}:{node.lineno} {module} has no {name}")
     assert not broken, "\n".join(broken)
+
+
+def _is_main_guard(node) -> bool:
+    return (
+        isinstance(node, ast.If)
+        and isinstance(node.test, ast.Compare)
+        and isinstance(node.test.left, ast.Name)
+        and node.test.left.id == "__name__"
+    )
+
+
+def test_no_tool_starts_spark_at_import():
+    """A tool builds its session inside a function or under its __main__
+    guard, so importing it (tests, sibling tools) never starts a JVM."""
+    found = []
+    for tool, tree in _tool_trees():
+        for stmt in tree.body:
+            if _is_main_guard(stmt) or isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Call) and "get_session" in (
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None)
+                ):
+                    found.append(f"{tool}:{node.lineno}")
+    assert not found, found
+
+
+def test_no_tool_reads_the_spark_ui():
+    """Stage metrics come from score_spark.profile (the in-process status
+    store), so no tool turns the UI on or fetches its REST API."""
+    banned = ("/api/v1", "uiWebUrl", "spark.ui.enabled")
+    found = []
+    for tool, tree in _tool_trees():
+        for node in ast.walk(tree):
+            text = (
+                node.value if isinstance(node, ast.Constant) and isinstance(node.value, str)
+                else getattr(node, "attr", None) or getattr(node, "id", None)
+            )
+            if isinstance(text, str) and any(b in text for b in banned):
+                found.append(f"{tool}:{node.lineno}: {text[:60]!r}")
+    assert not found, found

@@ -12,13 +12,13 @@ schedule/AQE/broadcast-materialization links whose cost is a CONSTANT of
 the plan, not data-sized work. q27 (r11) taught that "plausibly floor"
 gets probed, not asserted; this script is that probe.
 
-Discipline (same as tools/probe_q27.py): one fresh session, UI enabled
-(walls read slightly above bench's), warm-up, best-of-N walls through a
-noop sink, then ONE timed run per query whose completed stages are diffed
-around it via the UI REST API. For each stage: executorRunTime, task
-count, shuffle write; plus the serialized-gap accounting — the sum of
-inter-stage wall gaps where NO stage is running, which is pure scheduler/
-AQE/broadcast latency.
+Discipline (same as tools/probe_q27.py): one fresh session in bench
+posture (UI off), warm-up, best-of-N walls through a noop sink, then ONE
+timed run per query whose completed stages score_spark.profile reads from
+the in-process status store. For each stage: executor run time, task count,
+shuffle write; plus the serialized-gap accounting — the sum of wall gaps
+between stage [submitted, completed] intervals where NO stage is running,
+which is pure scheduler/AQE/broadcast latency.
 
 Verdict criteria:
   - if sum(execRunSec) is a small fraction of wall AND the timeline is a
@@ -37,75 +37,58 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from score_spark import profile  # noqa: E402
 
 RUNS = 6
 
 
-def _rest(spark, path):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{path}", timeout=10) as r:
-        return json.load(r)
-
-
-def _drain(spark):
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        time.sleep(0.5)
-
-
-def _parse_ts(s: str) -> float:
-    # "2026-08-16T08:00:00.123GMT"
-    from datetime import datetime
-
-    return datetime.strptime(s.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
-
-def _stage_timeline(spark, before_ids):
-    _drain(spark)
-    stages = [s for s in _rest(spark, "stages?status=complete") if s["stageId"] not in before_ids]
-    stages.sort(key=lambda s: s["firstTaskLaunchedTime"])
-    rows = []
-    for s in stages:
-        rows.append(
-            {
-                "stage": s["stageId"],
-                "name": s["name"].split("\n")[0][:60],
-                "tasks": s["numCompleteTasks"],
-                "execRunSec": round(s.get("executorRunTime", 0) / 1000, 3),
-                "shuffleWriteMB": round(s.get("shuffleWriteBytes", 0) / 2**20, 3),
-                "t0": _parse_ts(s["firstTaskLaunchedTime"]),
-                "t1": _parse_ts(s["completionTime"]),
-            }
-        )
-    return rows
-
-
-def _gap_accounting(rows):
-    """Wall intervals covered by NO running stage = scheduler/AQE/broadcast
-    links. Merge stage [t0, t1] windows, sum the holes."""
-    if not rows:
-        return {"covered_sec": 0.0, "gap_sec": 0.0, "span_sec": 0.0, "n_gaps": 0}
-    iv = sorted((r["t0"], r["t1"]) for r in rows)
-    merged = [list(iv[0])]
-    for a, b in iv[1:]:
-        if a <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], b)
-        else:
-            merged.append([a, b])
-    covered = sum(b - a for a, b in merged)
-    span = merged[-1][1] - merged[0][0]
-    gaps = [merged[i + 1][0] - merged[i][1] for i in range(len(merged) - 1)]
+def query_report(spark, build, sf_dir: str, runs: int = RUNS) -> dict:
+    """Walls of ``runs`` timed noop writes after two warm ones, then the
+    stage timeline of one more run."""
+    for _ in range(2):  # warm: plan memoization, page cache, JIT
+        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    walls = []
+    for _ in range(runs):
+        df = build(spark, sf_dir)
+        t0 = time.monotonic()
+        df.write.format("noop").mode("overwrite").save()
+        walls.append(round(time.monotonic() - t0, 3))
+        del df
+    plan = build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    m = profile.mark(spark)
+    t0 = time.monotonic()
+    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = round(time.monotonic() - t0, 3)
+    tl = sorted(profile.stages_since(spark, m), key=lambda r: r["launched"] or 0.0)
     return {
-        "covered_sec": round(covered, 3),
-        "gap_sec": round(sum(gaps), 3),
-        "span_sec": round(span, 3),
-        "n_gaps": len(gaps),
-        "gaps": [round(g, 3) for g in gaps],
+        "walls": walls,
+        "best": min(walls),
+        "median": sorted(walls)[len(walls) // 2],
+        "timed_run_wall": wall,
+        "n_stages": len(tl),
+        "sum_execRunSec": round(sum(r["exec_run_s"] for r in tl), 3),
+        "max_stage_execRunSec": round(max((r["exec_run_s"] for r in tl), default=0), 3),
+        "total_shuffleWriteMB": round(sum(r["shuffle_write_bytes"] for r in tl) / 2**20, 3),
+        "gap_accounting": profile.gap_accounting(tl),
+        "plan_counts": {
+            "exchanges": plan.count("Exchange"),
+            "broadcasts": plan.count("BroadcastExchange") + plan.count("BroadcastQueryStage"),
+            "scans": plan.count("FileScan") + plan.count("Scan parquet"),
+            "arrow_evals": plan.count("ArrowEvalPython") + plan.count("MapInPandas"),
+        },
+        "stages": [
+            {
+                "stage": r["id"],
+                "name": r["name"].split("\n")[0][:60],
+                "tasks": r["tasks"],
+                "execRunSec": round(r["exec_run_s"], 3),
+                "shuffleWriteMB": round(r["shuffle_write_bytes"] / 2**20, 3),
+            }
+            for r in tl
+        ],
     }
 
 
@@ -115,10 +98,7 @@ def main() -> None:
     from score_spark.operators.pipeline import c02_hash_split
     from score_spark.session import get_session
 
-    spark = get_session(
-        app_name="probe-c02-m01",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4062"},
-    )
+    spark = get_session(app_name="probe-c02-m01")
 
     def _warm(batches):
         yield from batches
@@ -129,42 +109,7 @@ def main() -> None:
     queries = {"c02_hash_split": c02_hash_split, "m01_media_pipeline": m01_media_pipeline}
     report = {"sf_dir": sf_dir, "runs": RUNS, "queries": {}}
     for name, build in queries.items():
-        for _ in range(2):  # warm: plan memoization, page cache, JIT
-            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls = []
-        for _ in range(RUNS):
-            df = build(spark, sf_dir)
-            t0 = time.monotonic()
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(round(time.monotonic() - t0, 3))
-            del df
-        plan = build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        before = {s["stageId"] for s in _rest(spark, "stages?status=complete")}
-        t0 = time.monotonic()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = round(time.monotonic() - t0, 3)
-        tl = _stage_timeline(spark, before)
-        acct = _gap_accounting(tl)
-        report["queries"][name] = {
-            "walls": walls,
-            "best": min(walls),
-            "median": sorted(walls)[len(walls) // 2],
-            "timed_run_wall": wall,
-            "n_stages": len(tl),
-            "sum_execRunSec": round(sum(r["execRunSec"] for r in tl), 3),
-            "max_stage_execRunSec": round(max((r["execRunSec"] for r in tl), default=0), 3),
-            "total_shuffleWriteMB": round(sum(r["shuffleWriteMB"] for r in tl), 3),
-            "gap_accounting": acct,
-            "plan_counts": {
-                "exchanges": plan.count("Exchange"),
-                "broadcasts": plan.count("BroadcastExchange") + plan.count("BroadcastQueryStage"),
-                "scans": plan.count("FileScan") + plan.count("Scan parquet"),
-                "arrow_evals": plan.count("ArrowEvalPython") + plan.count("MapInPandas"),
-            },
-            "stages": [
-                {k: v for k, v in r.items() if k not in ("t0", "t1")} for r in tl
-            ],
-        }
+        report["queries"][name] = query_report(spark, build, sf_dir)
     print(json.dumps(report, indent=2))
     spark.stop()
 

@@ -43,18 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: N812
 
-
-def _exec_cpu_ms(spark) -> int:
-    # sum executorRunTime over all completed stages via the REST-free API is
-    # awkward; use the all-stages REST endpoint instead
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete", timeout=10
-    ) as r:
-        return sum(s.get("executorRunTime", 0) for s in json.load(r))
+from score_spark import profile
 
 
 def compare_volume(spark, sigs, exprs) -> int:
@@ -87,10 +76,7 @@ def main() -> None:
     from score_spark.session import get_session
     from tools.scale_bench import gen_documents
 
-    spark = get_session(
-        app_name="probe-d04-sizing",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4063"},
-    )
+    spark = get_session(app_name="probe-d04-sizing")
     docs = gen_documents(spark, n_docs).localCheckpoint(eager=True)
     planted_expect = len([i for i in range(n_docs) if i % 50 == 1 and i > 0])
     rec_bits = recommended_simhash_bits(n_docs, max_hamming=3)
@@ -117,18 +103,14 @@ def main() -> None:
             print(f"[d04-sizing] {name}: {report['arms'][name]}", file=sys.stderr)
             sigs.unpersist()
             continue
-        walls, cpus_ms = [], []
+        walls, cpu_s = [], []
         for _ in range(runs):
-            c0 = _exec_cpu_ms(spark)
+            m = profile.mark(spark)
             t0 = time.monotonic()
             pairs = hamming_pairs(sigs, max_hamming=3, n_bits=bits if bits > 63 else None)
             n_pairs = pairs.count()
             walls.append(round(time.monotonic() - t0, 3))
-            try:
-                spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-            except Exception:
-                time.sleep(0.5)
-            cpus_ms.append(_exec_cpu_ms(spark) - c0)
+            cpu_s.append(sum(r["exec_cpu_s"] for r in profile.stages_since(spark, m)))
         planted = (
             hamming_pairs(sigs, max_hamming=3, n_bits=bits if bits > 63 else None)
             .filter((F.col("d2") - F.col("d1") == 1) & (F.col("d2") % 50 == 1))
@@ -140,7 +122,7 @@ def main() -> None:
             "compare_volume_pairs": vol,
             "walls": walls,
             "best_wall": min(walls),
-            "exec_cpu_sec": [round(c / 1000, 2) for c in cpus_ms],
+            "exec_cpu_sec": [round(c, 2) for c in cpu_s],
             "pairs_out": n_pairs,
             "planted_recall": f"{planted}/{planted_expect}",
         }

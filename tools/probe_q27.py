@@ -14,8 +14,9 @@ timeline discipline that closed q03/q28/d02:
   arm B = the shipped two-stage q27 (score_spark.queries.relational).
 
 Interleaved A/B/A/B... in ONE fresh session (so host-regime drift hits both
-arms equally), best-of-N per arm, noop sink, AQE on — bench posture, except
-the UI is enabled for the stage timeline (walls read slightly above bench's).
+arms equally), best-of-N per arm, noop sink, AQE on — bench posture, UI off
+included: the stage timeline comes from the in-process status store
+(score_spark.profile).
 
 Usage: python tools/probe_q27.py  [sf_dir]   # prints one JSON report
 """
@@ -26,7 +27,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,41 +34,25 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F  # noqa: N812
 
+from score_spark import profile
+
 RUNS_PER_ARM = 6
 
 
-def _rest(spark, path):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{path}", timeout=10) as r:
-        return json.load(r)
-
-
-def _drain(spark):
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        time.sleep(0.5)
-
-
-def _stage_timeline(spark, before_ids):
-    _drain(spark)
-    stages = [s for s in _rest(spark, "stages?status=complete") if s["stageId"] not in before_ids]
-    stages.sort(key=lambda s: s["firstTaskLaunchedTime"])
-    rows = []
-    for s in stages:
-        rows.append(
-            {
-                "stage": s["stageId"],
-                "name": s["name"].split("\n")[0][:60],
-                "tasks": s["numCompleteTasks"],
-                "execRunSec": round(s.get("executorRunTime", 0) / 1000, 3),
-                "launched": s["firstTaskLaunchedTime"],
-                "completed": s["completionTime"],
-                "shuffleWriteMB": round(s.get("shuffleWriteBytes", 0) / 2**20, 2),
-            }
-        )
-    return rows
+def _stage_timeline(spark, mark):
+    stages = sorted(profile.stages_since(spark, mark), key=lambda r: r["launched"] or 0.0)
+    return [
+        {
+            "stage": r["id"],
+            "name": r["name"].split("\n")[0][:60],
+            "tasks": r["tasks"],
+            "execRunSec": round(r["exec_run_s"], 3),
+            "launched": r["launched"],
+            "completed": r["completed"],
+            "shuffleWriteMB": round(r["shuffle_write_bytes"] / 2**20, 2),
+        }
+        for r in stages
+    ]
 
 
 def arm_one_stage(spark, sf_dir):
@@ -105,10 +89,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from score_spark.session import get_session
 
-    spark = get_session(
-        app_name="probe-q27",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4061"},
-    )
+    spark = get_session(app_name="probe-q27")
 
     def _warm(batches):
         yield from batches
@@ -143,11 +124,11 @@ def main() -> None:
     # stage timeline: one fresh timed run per arm, stages diffed around it
     timelines = {}
     for name, build in arms.items():
-        before = {s["stageId"] for s in _rest(spark, "stages?status=complete")}
+        m = profile.mark(spark)
         t0 = time.monotonic()
         build(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = round(time.monotonic() - t0, 3)
-        tl = _stage_timeline(spark, before)
+        tl = _stage_timeline(spark, m)
         timelines[name] = {"wall": wall, "stages": tl}
 
     report = {

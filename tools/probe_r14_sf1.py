@@ -11,7 +11,8 @@ Subcommands (argv[1]):
              trigger).
   codec    — lz4 vs zstd shuffle codec on the d02 pair miner + d04 wide
              hamming join at sf1 (VERDICT #6 / guide §2.3): wall + shuffle
-             bytes from the REST stage API, fresh session per codec.
+             bytes of every completed stage (score_spark.profile), fresh
+             session per codec.
 
 Usage: python tools/probe_r14_sf1.py <cmd> [sf_dir]
 Default sf_dir: <repo>/.scale_fixtures/sf1
@@ -27,7 +28,6 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -37,9 +37,7 @@ RUNS = 3
 def _session(name, extra=None):
     from score_spark.session import get_session
 
-    conf = {"spark.ui.enabled": "true", "spark.ui.port": "4072"}
-    conf.update(extra or {})
-    spark = get_session(app_name=name, extra_conf=conf)
+    spark = get_session(app_name=name, extra_conf=extra)
     spark.read.parquet(os.path.join(_sf_dir(), "region.parquet")).count()
     return spark
 
@@ -173,8 +171,7 @@ def d04skew() -> None:
 
 
 def codec() -> None:
-    import probe_c02_m01 as P
-
+    from score_spark import profile
     from score_spark.io import load_table
     from score_spark.operators.dedup import (
         hamming_pairs,
@@ -201,10 +198,9 @@ def codec() -> None:
             rec["d04_wide"].append(
                 _noop(hamming_pairs(simhash(d, n_bits=bits), max_hamming=3, n_bits=bits))
             )
-        P._drain(spark)
-        stages = P._rest(spark, "stages?status=complete")
-        rec["total_shuffle_write_bytes"] = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-        rec["total_shuffle_read_bytes"] = sum(s.get("shuffleReadBytes", 0) for s in stages)
+        stages = profile.stages_since(spark, 0)  # every job of this fresh session
+        rec["total_shuffle_write_bytes"] = sum(s["shuffle_write_bytes"] for s in stages)
+        rec["total_shuffle_read_bytes"] = sum(s["shuffle_read_bytes"] for s in stages)
         rec["best_d02"] = min(rec["d02_pairs"])
         rec["best_d04"] = min(rec["d04_wide"])
         out["codecs"][cdc] = rec

@@ -13,8 +13,9 @@ scheduler/AQE/broadcast links (the constant a cluster amortizes), and
 whether any stage's executor time is out of proportion to its input
 (actual waste -> fix the plan).
 
-Reuses the probe_c02_m01 instrument (same REST stage diffing, same gap
-accounting). Usage:
+Reuses the probe_c02_m01 instrument (query_report: best-of-N walls, then
+one run's stage timeline and gap accounting from score_spark.profile).
+Usage:
 
     python tools/probe_sf1_top_rows.py [sf_dir] [query ...]
 
@@ -27,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -56,10 +56,7 @@ def main() -> None:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
 
-    spark = get_session(
-        app_name="probe-sf1-top-rows",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4063"},
-    )
+    spark = get_session(app_name="probe-sf1-top-rows")
 
     def _warm(batches):
         yield from batches
@@ -73,40 +70,9 @@ def main() -> None:
         load1 = None
     report = {"sf_dir": sf_dir, "runs": RUNS, "load1_start": load1, "queries": {}}
     for name in names:
-        build = QUERIES[name]
-        for _ in range(2):  # warm: plan memoization, page cache, JIT
-            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls = []
-        for _ in range(RUNS):
-            df = build(spark, sf_dir)
-            t0 = time.monotonic()
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(round(time.monotonic() - t0, 3))
-            del df
-        plan = build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        before = {s["stageId"] for s in P._rest(spark, "stages?status=complete")}
-        t0 = time.monotonic()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = round(time.monotonic() - t0, 3)
-        tl = P._stage_timeline(spark, before)
-        acct = P._gap_accounting(tl)
-        report["queries"][name] = {
-            "walls": walls,
-            "best": min(walls),
-            "median": sorted(walls)[len(walls) // 2],
-            "timed_run_wall": wall,
-            "n_stages": len(tl),
-            "sum_execRunSec": round(sum(r["execRunSec"] for r in tl), 3),
-            "max_stage_execRunSec": round(max((r["execRunSec"] for r in tl), default=0), 3),
-            "total_shuffleWriteMB": round(sum(r["shuffleWriteMB"] for r in tl), 3),
-            "gap_accounting": acct,
-            "plan_counts": {
-                "exchanges": plan.count("Exchange"),
-                "broadcasts": plan.count("BroadcastExchange") + plan.count("BroadcastQueryStage"),
-                "scans": plan.count("FileScan") + plan.count("Scan parquet"),
-            },
-            "stages": [{k: v for k, v in r.items() if k not in ("t0", "t1")} for r in tl],
-        }
+        rep = P.query_report(spark, QUERIES[name], sf_dir, RUNS)
+        rep["plan_counts"].pop("arrow_evals")
+        report["queries"][name] = rep
     print(json.dumps(report, indent=2))
     spark.stop()
 

@@ -4,7 +4,8 @@
 corpora at 1x (sf0.1-shaped: 5k docs / 2k vectors) and 10x with the SAME
 deterministic generator and the SAME planted-duplicate RATE, run
 d02/d03/d05/s05/c05-shaped pipelines on each, and report wall-clock plus
-per-stage maxima (input bytes, shuffle write) from the UI REST API — the
+per-stage maxima (input bytes, shuffle write) from the in-process status
+store (score_spark.profile) — the
 "does the 100 TB design claim survive a measured 10x?" check.
 
 Generator notes (why not replicate the testdata 10x): exact replication
@@ -32,13 +33,14 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 import pyspark.sql.functions as F  # noqa: N812
 from pyspark.sql import DataFrame, SparkSession
+
+from score_spark import profile
 
 WORK_DIR = os.environ.get("SCORE_SPARK_SCALE_DIR", os.path.join(REPO_ROOT, ".scale_fixtures"))
 SEED = 7
@@ -113,65 +115,27 @@ def _materialize(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def _completed_stages(spark: SparkSession) -> dict[int, dict]:
-    """stageId -> {inputBytes, shuffleWriteBytes} via the UI REST API."""
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete", timeout=10
-        ) as r:
-            stages = json.load(r)
-        return {
-            s["stageId"]: {
-                "inputBytes": s.get("inputBytes", 0),
-                "shuffleWriteBytes": s.get("shuffleWriteBytes", 0),
-                "executorRunTime": s.get("executorRunTime", 0),
-                "jvmGcTime": s.get("jvmGcTime", 0),
-            }
-            for s in stages
-        }
-    except Exception:
-        return {}
-
-
-def _drain_listener_bus(spark: SparkSession) -> None:
-    """The AppStatusStore behind the REST API is fed asynchronously from the
-    listener bus: an action can return while its last stage-completion event
-    is still queued, and the 'after' snapshot would then miss that stage's
-    metrics (review r7). Wait for the bus to drain before reading."""
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        try:
-            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        except Exception:
-            time.sleep(0.5)  # best effort: the API is Spark-internal
-
-
 def _run_op(spark: SparkSession, build, runs: int = 3) -> dict:
     """Best-of-N wall-clock for build() -> noop write, plus per-stage maxima
-    and total executor run time for the stages the op ran (stage-set diff
-    around the best run). Executor time is the primary SCALING metric on
+    and total executor run time for the stages the op ran (the completed
+    stages of the best run's jobs). Executor time is the primary SCALING metric on
     this host: wall-clock of sub-10s runs moves 2-3x with VM steal between
     back-to-back identical runs (observed), while summed executor time
     tracks the work actually done."""
     best, best_stats = None, {}
     for _ in range(runs):
-        before = set(_completed_stages(spark))
+        m = profile.mark(spark)
         t0 = time.monotonic()
         build().write.format("noop").mode("overwrite").save()
         elapsed = time.monotonic() - t0
-        _drain_listener_bus(spark)
-        after = _completed_stages(spark)
-        new = [v for k, v in after.items() if k not in before]
+        new = profile.stages_since(spark, m)
         stats = {
-            "max_stage_input_mb": round(max((s["inputBytes"] for s in new), default=0) / 2**20, 1),
+            "max_stage_input_mb": round(max((s["input_bytes"] for s in new), default=0) / 2**20, 1),
             "max_stage_shuffle_write_mb": round(
-                max((s["shuffleWriteBytes"] for s in new), default=0) / 2**20, 1
+                max((s["shuffle_write_bytes"] for s in new), default=0) / 2**20, 1
             ),
-            "executor_sec": round(sum(s["executorRunTime"] for s in new) / 1000, 2),
-            "gc_sec": round(sum(s["jvmGcTime"] for s in new) / 1000, 2),
+            "executor_sec": round(sum(s["exec_run_s"] for s in new), 2),
+            "gc_sec": round(sum(s["gc_s"] for s in new), 2),
             "n_stages": len(new),
         }
         if best is None or elapsed < best:
@@ -335,10 +299,7 @@ def _deep_worker(argv: list[str]) -> None:
     docs_10x, docs_100x, embs, events, out_json, ops_csv = argv
     from score_spark.session import get_session
 
-    spark = get_session(
-        app_name="score-spark-scale-deep",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4058"},
-    )
+    spark = get_session(app_name="score-spark-scale-deep")
 
     def _warm(batches):
         yield from batches
@@ -362,12 +323,7 @@ def main() -> None:
 
     from score_spark.session import get_session
 
-    spark = get_session(
-        app_name="score-spark-scale",
-        # the session factory disables the UI for bench cleanliness; this
-        # harness needs the REST stage metrics (input/shuffle maxima)
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4057"},
-    )
+    spark = get_session(app_name="score-spark-scale")
 
     def _warm(batches):
         yield from batches
