@@ -8,6 +8,13 @@ Rebuild of the reference pipeline (SchemaOnReadGenerator.java:42-63):
   3. requirement-trie intersection with each relation's full schema;
   4. best-effort: any failure → full schema (README.md:9).
 
+The analysis reads the JVM once: the vendored ``score.sor.PlanExport.export``
+(vendor/plan-export-src, built by vendor/build_plan_export_jar.sh) returns the
+plan JSON plus every file relation's files, root paths and schema in one
+py4j reply, the way the reference reads them in-process as a JVM library.
+Beyond the three-call memo lookup it is the analyzer's only JVM call; the
+pairing of relations with plan leaves and the walk stay in Python.
+
 Architectural deviation from the reference (deliberate, SURVEY.md §7):
 attributes are tracked by Catalyst **exprId** straight from the analyzed-plan
 JSON, not by regex-re-parsing ``Expression.sql()`` strings
@@ -29,15 +36,17 @@ linking across branches, Expand (rollup/cube) projections.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
-from concurrent.futures import wait as futures_wait
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, types as T
 
@@ -216,14 +225,26 @@ _GENERATE_CACHE: dict[int, tuple[Any, "SchemaOnRead"]] = {}
 
 _log = logging.getLogger(__name__)
 
-# single long-lived worker for the whole-plan toJSON overlap in generate():
-# one thread so there is exactly ONE extra py4j connection for the process,
-# created lazily and reused (see the generate() comment). Created PER
-# PROCESS (r13 self-review): a fork after first use would leave the child
-# with a registered-but-dead worker thread, and the child's next submit()
-# would queue work no thread ever runs — fut.result() hangs forever.
+# the vendored exporter (vendor/build_plan_export_jar.sh): its one reply
+# carries the plan JSON and every file relation's files, roots and schema
+_PLAN_EXPORT_CLASS = "score.sor.PlanExport"
+_PLAN_EXPORT_JAR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "vendor",
+    "score-spark-plan-export.jar",
+)
+
+# single long-lived worker that makes the export call (see the generate()
+# comment): one thread, so there is exactly ONE extra py4j connection for
+# the process, created lazily and reused. Created PER PROCESS (r13
+# self-review): a fork after first use would leave the child with a
+# registered-but-dead worker thread, and the child's next submit() would
+# queue work no thread ever runs — fut.result() hangs forever.
 _PLAN_JSON_POOL: ThreadPoolExecutor | None = None
 _PLAN_JSON_POOL_PID: int | None = None
+# the worker thread's resolved PlanExport.export member, or why it could not
+# be resolved (set by its initializer, per thread so pools never share it)
+_WORKER = threading.local()
 
 
 def _jvm_socket():
@@ -234,12 +255,12 @@ def _jvm_socket():
 
 
 def _jvm_nodelay() -> None:
-    """Pool initializer: turn off Nagle on the worker's JVM socket.
+    """Turn off Nagle on the worker's JVM socket.
 
     py4j sets no TCP_NODELAY on either end, and the JVM writes a reply
-    through an 8 KB BufferedWriter. A plan-JSON reply over 8 KB leaves in
+    through an 8 KB BufferedWriter. An export reply over 8 KB leaves in
     more than one segment, and Nagle holds the tail back until Python's
-    delayed ACK arrives: 43-50 ms added to a toJSON that otherwise takes a
+    delayed ACK arrives: 43-50 ms added to an export that otherwise takes a
     few ms (BASELINE.md "Analyzer budget", re-measure 2026-10). A failure
     here (e.g. no per-thread connection with PYSPARK_PIN_THREAD=false) must
     not raise: a raising initializer breaks the pool, and every later
@@ -250,12 +271,57 @@ def _jvm_nodelay() -> None:
         _log.warning("plan-JSON py4j socket keeps Nagle on: %s: %s", type(e).__name__, e)
 
 
+def _plan_export_member():
+    """``PlanExport.export`` as a py4j member bound once: looking the class
+    up on every call costs two more round trips (~1.7 ms).
+
+    A session not made by get_session() has no vendor jars on spark.jars.
+    Attaching the jar through the session's resource loader also sets THIS
+    JVM thread's context class loader, which py4j resolves classes through;
+    other threads' loaders do not change, so the export call stays on the
+    worker."""
+    jvm = SparkContext._jvm
+
+    def lookup():  # a JavaPackage, not a JavaClass, when the class is unknown
+        return functools.reduce(getattr, _PLAN_EXPORT_CLASS.split("."), jvm)
+
+    cls = lookup()
+    if not isinstance(cls, JavaClass):
+        jvm.org.apache.spark.sql.SparkSession.active().sessionState().resourceLoader().addJar(_PLAN_EXPORT_JAR)
+        cls = lookup()
+    if not isinstance(cls, JavaClass):
+        raise RuntimeError("class not visible after attaching the jar")
+    return cls.export
+
+
+def _init_worker() -> None:
+    """Pool initializer: Nagle off, then resolve the exporter once. Never
+    raises (see _jvm_nodelay); a failed resolution is raised by each export
+    call instead, and generate() falls back with that reason."""
+    _jvm_nodelay()
+    try:
+        _WORKER.export, _WORKER.error = _plan_export_member(), None
+    except Exception as e:
+        _WORKER.export = None
+        _WORKER.error = (
+            f"{_PLAN_EXPORT_CLASS} unavailable from {_PLAN_EXPORT_JAR} ({type(e).__name__}: {e}); "
+            "start the session with score_spark.session.get_session(), which loads vendor/*.jar"
+        )
+
+
+def _export_plan(jplan) -> str:
+    """Runs on the worker: the one py4j round trip of a cold analysis."""
+    if _WORKER.export is None:
+        raise RuntimeError(_WORKER.error)
+    return _WORKER.export(jplan)
+
+
 def _plan_json_pool() -> ThreadPoolExecutor:
     global _PLAN_JSON_POOL, _PLAN_JSON_POOL_PID
     pid = os.getpid()
     if _PLAN_JSON_POOL is None or _PLAN_JSON_POOL_PID != pid:
         _PLAN_JSON_POOL = ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix="sor-plan-json", initializer=_jvm_nodelay
+            max_workers=1, thread_name_prefix="sor-plan-json", initializer=_init_worker
         )
         _PLAN_JSON_POOL_PID = pid
     return _PLAN_JSON_POOL
@@ -273,6 +339,10 @@ class SchemaOnRead:
         # when the analysis succeeded
         self.error: str | None = None
         self.duration: float = 0.0
+        # phase split of a successful cold analysis (ms): the export round
+        # trip, decoding and parsing its reply, the walk. A memo hit
+        # returns the cached analysis with the timings of its cold run.
+        self.timings: dict[str, float] = {}
         # relations living inside subquery-expression plans, keyed by the
         # frozenset of their output (jvmId, id) exprIds — order-independent
         # pairing, unlike the main plan's k-th-leaf iterator (review r10)
@@ -290,9 +360,10 @@ class SchemaOnRead:
             jplan = df._jdf.queryExecution().analyzed()
             # memoized per structurally-equal plan: repeat analysis of the
             # same query (the production pattern — derive the read schema
-            # once, reuse across runs) skips the plan-JSON round-trip, the
-            # relation collectors and the walk (a cold suite plan is ~5 ms
-            # p50 with the worker's TCP_NODELAY on; a hit is under 1 ms).
+            # once, reuse across runs) skips the PlanExport.export round
+            # trip (the analyzer's only JVM call besides these three memo
+            # lookups), the reply parse and the walk (a cold suite plan is
+            # ~5 ms p50; a hit is under 1 ms).
             # Exact case-class equality, NOT sameResult(): canonicalization
             # strips SubqueryAlias nodes, which for_view() depends on.
             h = jplan.hashCode()
@@ -307,41 +378,33 @@ class SchemaOnRead:
         self = cls()
         relations: list[dict[str, Any] | None] = []
         try:
-            # the three JVM pre-passes are independent pure reads of the
-            # analyzed plan. Run the whole-plan toJSON on its OWN py4j
-            # thread so it overlaps the relation collectors (~27 ms combined
-            # on the subquery-heavy budget shape, BASELINE.md "Analyzer
-            # budget" r13) instead of serializing after them: cold
-            # subquery-heavy drops ~25%. Its reply is the one large py4j
-            # reply of the analysis (7-172 KB on the suite plans); the
-            # worker's socket has TCP_NODELAY on (_jvm_nodelay), without
-            # which every reply over 8 KB could stall ~43 ms on a delayed
-            # ACK.
-            # PySpark's pinned-thread mode gives each Python thread its own
-            # JVM thread; all three calls only read materialized state
-            # (df.schema already forced analysis), so there is no shared
-            # mutable JVM state. The worker is a LONG-LIVED single-thread
-            # executor, not a thread per call: pinned mode opens a fresh
-            # py4j connection + JVM thread for every new Python thread
-            # (measured +12 ms on the PLAIN cold leg with per-call
-            # threads), and the pool amortizes that to once per process.
-            # Any serializer failure is re-raised by .result() and lands in
-            # the same best-effort fallback as before.
-            fut = _plan_json_pool().submit(jplan.toJSON)
-            try:
-                relations = _collect_jvm_relations(jplan)
-                self._subq_rels = _collect_jvm_subquery_relations(jplan)
-            except BaseException:
-                # drain WITHOUT .result(): result() would re-raise the
-                # serializer's own error here and MASK the original
-                # exception (r13 self-review: a KeyboardInterrupt during
-                # the collectors got converted into the serializer's
-                # Py4JError and swallowed by the fallback handler)
-                futures_wait([fut])
-                raise
-            flat = json.loads(fut.result())
-            root = build_tree(flat)
+            # the analysis's one py4j round trip: PlanExport.export returns
+            # the plan JSON plus every file relation's files, roots and
+            # schema. It runs on the worker: its socket has TCP_NODELAY on
+            # (_jvm_nodelay), without which an export reply over 8 KB (most
+            # suite plans) could stall ~43 ms on a delayed ACK, and only its
+            # JVM thread sees a jar attached at runtime
+            # (_plan_export_member). The worker is a LONG-LIVED
+            # single-thread executor, not a thread per call:
+            # pinned mode opens a fresh py4j connection + JVM thread for
+            # every new Python thread (measured +12 ms per call), and the
+            # pool amortizes that to once per process. Any export failure
+            # is re-raised by .result() and lands in the best-effort
+            # fallback.
+            t = time.monotonic()
+            reply = _plan_json_pool().submit(_export_plan, jplan).result()
+            t_export = time.monotonic()
+            payload = json.loads(reply)
+            relations = _collect_jvm_relations(payload)
+            self._subq_rels = _collect_jvm_subquery_relations(payload)
+            root = build_tree(payload["plan"])
+            t_parse = time.monotonic()
             self._analyze(root, relations)
+            self.timings = {
+                "export_ms": (t_export - t) * 1e3,
+                "parse_ms": (t_parse - t_export) * 1e3,
+                "walk_ms": (time.monotonic() - t_parse) * 1e3,
+            }
             if h is not None:
                 if len(_GENERATE_CACHE) >= 64:
                     _GENERATE_CACHE.pop(next(iter(_GENERATE_CACHE)))
@@ -1267,75 +1330,37 @@ def _node_output(node: Node) -> list[tuple[str, int]]:
     return []
 
 
-def _collect_jvm_relations(jplan) -> list[dict[str, Any] | None]:
-    """Pair each LogicalRelation with its file paths and full schema (the
-    JSON serialization drops the relation object). Identity = sorted
-    qualified input files (SchemaOnReadState.java:80-95,122-126).
-
-    LogicalRelation is a Catalyst LeafNode, so ONE ``collectLeaves()`` py4j
-    call (pre-order, matching the JSON walker's encounter order) replaces a
-    Python-driven recursion whose per-node ``getClass``/``children`` round
-    trips dominated analyzer overhead on window-heavy plans (VERDICT r2
-    "Next round" #8: 96 ms warm → target ≤ 50 ms)."""
-    out: list[dict[str, Any] | None] = []
-    leaves = jplan.collectLeaves()
-    for i in range(leaves.length()):
-        jnode = leaves.apply(i)
-        if jnode.getClass().getName().rsplit(".", 1)[-1] != "LogicalRelation":
-            continue
-        out.append(_jvm_relation_info(jnode))
-    return out
+def _collect_jvm_relations(payload: dict[str, Any]) -> list[dict[str, Any] | None]:
+    """The main plan's file relations from an export reply, in the order of
+    its LogicalRelation leaves (collectLeaves() pre-order, the JSON walker's
+    encounter order); None for a non-file relation. The plan JSON drops the
+    relation object, so this is where each leaf's paths and full schema come
+    from. Identity = sorted qualified input files
+    (SchemaOnReadState.java:80-95,122-126)."""
+    return [_relation_info(r) for r in payload["relations"]]
 
 
-def _jvm_relation_info(jnode) -> dict[str, Any] | None:
-    rel = jnode.relation()
-    if not rel.getClass().getName().endswith("HadoopFsRelation"):
+def _relation_info(rel: dict[str, Any] | None) -> dict[str, Any] | None:
+    if rel is None:
         return None
-    loc = rel.location()  # fetched once: each py4j round trip is ~0.3 ms
-    files = tuple(sorted(loc.inputFiles()))
-    roots = tuple(str(p) for p in _scala_seq(loc.rootPaths()))
-    schema = T.StructType.fromJson(json.loads(rel.schema().json()))
-    return {"ref": files, "root_paths": roots, "schema": schema}
+    return {
+        "ref": tuple(sorted(rel["files"])),
+        "root_paths": tuple(rel["roots"]),
+        "schema": T.StructType.fromJson(rel["schema"]),
+    }
 
 
-def _collect_jvm_subquery_relations(jplan) -> dict[frozenset, dict[str, Any] | None]:
-    """Relations inside subquery-EXPRESSION plans (review r10).
+def _collect_jvm_subquery_relations(payload: dict[str, Any]) -> dict[frozenset, dict[str, Any] | None]:
+    """Relations inside subquery-EXPRESSION plans (review r10), from an
+    export reply.
 
     collectLeaves() never descends into subquery expressions (the nested
     plan is an expression field, not a plan child), so these relations need
     their own channel. The k-th-leaf order pairing doesn't extend across
     that boundary robustly; instead each relation is keyed by the frozenset
     of its output attributes' (jvmId, id) exprIds — globally unique per
-    relation instance, and the JSON node carries the same ids. The py4j
-    round trips only happen when subqueries exist at all (the common case
-    is an empty subqueriesAll, two py4j calls total).
-
-    The key is extracted from ONE toJSON() call per leaf, parsed by the
-    same expr_trees/expr_id helpers the main-plan walker uses — the r10
-    shape did 3 py4j round trips per output ATTRIBUTE (jvmId/id/toString),
-    which on wide relations inside several subqueries blew the <100 ms
-    warm-analyzer budget (ADVICE r10; measured 116 ms median on a 4-subquery
-    plan over 16-column lineitem, ~47 ms of it in the per-attr loop)."""
-    from .plan_json import expr_id, expr_trees
-
-    out: dict[frozenset, dict[str, Any] | None] = {}
-    subs = jplan.subqueriesAll()
-    for i in range(subs.length()):
-        leaves = subs.apply(i).collectLeaves()
-        for k in range(leaves.length()):
-            jnode = leaves.apply(k)
-            if jnode.getClass().getName().rsplit(".", 1)[-1] != "LogicalRelation":
-                continue
-            # leaf serialized once; element 0 of the flat list is the node
-            node = json.loads(jnode.toJSON())[0]
-            key = frozenset(
-                eid
-                for o in expr_trees(node.get("output"))
-                if (eid := expr_id(o)) is not None
-            )
-            out[key] = _jvm_relation_info(jnode)
-    return out
-
-
-def _scala_seq(seq) -> list:
-    return [seq.apply(i) for i in range(seq.length())]
+    relation instance, and the plan JSON carries the same ids."""
+    return {
+        frozenset((jvm_id, i) for jvm_id, i in sub["key"]): _relation_info(sub["rel"])
+        for sub in payload["subquery_relations"]
+    }

@@ -1755,3 +1755,119 @@ def test_fallback_keeps_its_reason(spark, fx, monkeypatch):
     assert sor._failed
     assert sor.error == "RuntimeError: plan JSON unreadable"
     assert sor.for_paths(path) == full.schema
+
+
+def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
+    """A cold analysis reads the JVM through one PlanExport.export call on
+    the worker; the caller makes only the memo lookup's three calls
+    (queryExecution, analyzed, hashCode). Before the exporter, this plan
+    cost more than 60 py4j calls on the caller (~18 per file relation)."""
+    import threading
+    from collections import Counter
+
+    import py4j.clientserver as cs
+
+    from score_spark.schema_on_read import generator as G
+
+    G._plan_json_pool().submit(lambda: None).result()  # initializer done
+    spark.read.parquet(fx["sample_parquet"]).createOrReplaceTempView("rt_a")
+    spark.read.option("multiline", True).schema(SAMPLE_SCHEMA).json(fx["sample_json"]).createOrReplaceTempView("rt_b")
+    spark.read.parquet(fx["partitioned"]).createOrReplaceTempView("rt_c")
+    q = spark.sql(
+        "SELECT a.struct.col1, b.someStr, c.nestedStruct.str FROM rt_a a "
+        "JOIN rt_b b ON a.someLong = b.someLong JOIN rt_c c ON a.someStr = c.someStr "
+        "WHERE a.someLong IN (SELECT struct.col2 FROM rt_b) "
+        "AND a.struct.col3 > (SELECT min(someLong) FROM rt_c)"
+    )
+    q.schema
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    calls: Counter = Counter()
+    send = cs.ClientServerConnection.send_command
+
+    def counted(conn, command):
+        calls[threading.current_thread().name] += 1
+        return send(conn, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    sor = SchemaOnRead.generate(q)
+    monkeypatch.undo()
+    worker = sum(n for name, n in calls.items() if name.startswith("sor-plan-json"))
+    assert worker == 1, calls
+    assert calls[threading.current_thread().name] <= 3, calls
+    assert sor.error is None
+    assert len(sor.relations) == 3 and len(sor._subq_rels) == 2
+    assert sor.for_paths(fx["sample_parquet"])["struct"].dataType.fieldNames() == ["col1", "col3"]
+    assert set(sor.timings) == {"export_ms", "parse_ms", "walk_ms"}
+    assert all(v > 0 for v in sor.timings.values())
+    assert sum(sor.timings.values()) <= sor.duration * 1e3
+
+
+def test_plan_export_jar_matches_its_source():
+    """The committed jar was built from the committed source: the build
+    script stores the source's SHA-256 in the jar. Re-run
+    vendor/build_plan_export_jar.sh after editing vendor/plan-export-src."""
+    import hashlib
+    import zipfile
+
+    from score_spark.schema_on_read import generator as G
+
+    src = os.path.join(os.path.dirname(G._PLAN_EXPORT_JAR), "plan-export-src", "score", "sor", "PlanExport.java")
+    with open(src, "rb") as fh:
+        want = hashlib.sha256(fh.read()).hexdigest()
+    with zipfile.ZipFile(G._PLAN_EXPORT_JAR) as jar:
+        built_from = jar.read("score/sor/PlanExport.java.sha256").decode().strip()
+        assert "score/sor/PlanExport.class" in jar.namelist()
+    assert built_from == want, "vendor/score-spark-plan-export.jar is stale: run vendor/build_plan_export_jar.sh"
+
+
+def test_plain_session_attaches_the_exporter(tmp_path):
+    """A session from a plain SparkSession.builder has no vendor jars on
+    spark.jars; the worker attaches the exporter jar at runtime and the
+    analysis still prunes. In a subprocess because spark.jars is fixed when
+    the JVM starts."""
+    import json
+    import subprocess
+    import sys
+
+    script = (
+        "import json, sys\n"
+        "from pyspark.sql import SparkSession\n"
+        "from score_spark.schema_on_read import SchemaOnRead\n"
+        "spark = (SparkSession.builder.master('local[1]').config('spark.ui.enabled', 'false')\n"
+        "         .config('spark.driver.memory', '1g').getOrCreate())\n"
+        "assert not spark.sparkContext.getConf().get('spark.jars', '')\n"
+        "path = sys.argv[1]\n"
+        "spark.range(3).selectExpr('id', 'named_struct(\"a\", id, \"b\", named_struct(\"c\", id, \"d\", id)) s')"
+        ".write.parquet(path)\n"
+        "sor = SchemaOnRead.generate(spark.read.parquet(path).select('s.b.c'))\n"
+        "print(json.dumps([sor.error, sor.for_paths(path).jsonValue()]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SCORE_SPARK_SOR_RAISE"}
+    r = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "nested.parquet")],
+        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    )
+    assert r.returncode == 0, (r.stdout + r.stderr)[-2000:]
+    error, pruned = json.loads(r.stdout.strip().splitlines()[-1])
+    assert error is None
+    assert T.StructType.fromJson(pruned) == st(f("s", st(f("b", st(f("c", LONG))))))
+
+
+def test_missing_exporter_falls_back_naming_jar_and_get_session(spark, fx, monkeypatch):
+    """When the exporter class stays invisible after the runtime attach,
+    generate() falls back to full schemas and ``error`` says which jar to
+    load and that get_session() loads it."""
+    from score_spark.schema_on_read import generator as G
+
+    monkeypatch.delenv("SCORE_SPARK_SOR_RAISE", raising=False)
+    monkeypatch.setattr(G, "_PLAN_EXPORT_CLASS", "score.sor.NoSuchExport")
+    monkeypatch.setattr(G, "_PLAN_JSON_POOL", None)  # fresh worker, restored after
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    pool = G._plan_json_pool()
+    try:
+        sor = SchemaOnRead.generate(spark.read.parquet(fx["sample_parquet"]).select("struct.col1"))
+    finally:
+        pool.shutdown()
+    assert sor._failed
+    assert G._PLAN_EXPORT_JAR in sor.error and "get_session" in sor.error, sor.error
