@@ -580,9 +580,9 @@ def _chunk_keys(sig_col: str, n_bits: int, n_chunks: int, word_bits: int) -> lis
     the REAL width (review r12): partitioning a 32-bit signature over 64
     bits hands every chunk above bit 31 a constant-zero key — one
     all-corpus hot bucket per dead chunk, the exact degeneracy the width
-    sizing exists to avoid. Module-level so probes can measure bucket
-    occupancy with the EXACT production keys
-    (tools/probe_d04_sizing_e2e.py)."""
+    sizing exists to avoid. Module-level so tests can measure bucket
+    occupancy with the EXACT production keys (BASELINE.md "d04 width law
+    shipped AND demonstrated end-to-end (r12)")."""
 
     def word(w: int) -> str:
         return f"`{sig_col}`" if word_bits == 64 else f"`{sig_col}`[{w}]"

@@ -11,9 +11,13 @@ Usage (mirrors the reference's README flow,
     pruned = sor.for_paths(path)          # minimal StructType
     fast = spark.read.schema(pruned).json(path).select("struct.col1")
 
-Best-effort contract: `generate` never raises; on any analysis failure the
-full source schema is returned (reference: README.md:9,
-SchemaOnReadExtractor.java:154-158).
+Best-effort contract: `generate` never raises; on an analysis failure
+`sor.error` holds the reason and `for_paths` returns the full schema of each
+source the analysis had collected before it failed (reference: README.md:9,
+SchemaOnReadExtractor.java:154-158). When it had collected none, as when
+the plan export call itself failed, `for_paths` and `for_view` raise a
+KeyError whose message carries `sor.error`; `prune` then reads every source
+in full with one warning each.
 """
 
 from score_spark.schema_on_read.generator import SchemaOnRead

@@ -42,6 +42,7 @@ import logging
 import os
 import threading
 import time
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
@@ -348,6 +349,12 @@ class SchemaOnRead:
         # pairing, unlike the main plan's k-th-leaf iterator (review r10)
         self._subq_rels: dict[frozenset, dict[str, Any] | None] = {}
         self._subq_depth = 0
+        # walk state: the main plan's file relations in collectLeaves()
+        # order, CTE def nodes by cteId, and which defs a ref exposes as
+        # final output
+        self._rel_iter: Iterator[dict[str, Any] | None] = iter(())
+        self._cte_def_nodes: dict[int, Node] = {}
+        self._cte_exposed: dict[int, bool] = {}
 
     # ------------------------------------------------------------------ API
 
@@ -436,13 +443,18 @@ class SchemaOnRead:
                 any(f == w or f.startswith(w + "/") for w in want) for f in files
             ):
                 return self._emit(rel)
-        raise KeyError(f"no file relation in this plan matches paths {sorted(want)}")
+        raise KeyError(self._not_found(f"no file relation in this plan matches paths {sorted(want)}"))
 
     def for_view(self, name: str) -> T.StructType:
         ref = self._state.alias_to_ref.get(name.lower())
         if ref is None:
-            raise KeyError(f"no relation registered under alias {name!r}")
+            raise KeyError(self._not_found(f"no relation registered under alias {name!r}"))
         return self._emit(self._state.relations[ref])
+
+    def _not_found(self, msg: str) -> str:
+        # a failed analysis knows only the relations collected before it
+        # failed (none when the export itself failed): say why
+        return f"{msg}; the analysis failed: {self.error}" if self._failed else msg
 
     @property
     def relations(self) -> list[RelationInfo]:
@@ -532,10 +544,8 @@ class SchemaOnRead:
             # plan here; _visit exposes defs based on where refs sit.
             children = node["_children"]
             defs, plan = children[:-1], children[-1]
-            self._cte_def_nodes = getattr(self, "_cte_def_nodes", {})
             for d in defs:
                 self._cte_def_nodes[d["id"]] = d
-            self._cte_exposed = getattr(self, "_cte_exposed", {})
             self._mark_upper_most(plan, found)
             # REVERSED def order (review r9): refs only point at EARLIER
             # defs, so exposure discovered while pre-passing a later def
@@ -548,9 +558,8 @@ class SchemaOnRead:
                 self._mark_upper_most(d["_children"][0], found=not exposed)
             return
         if cname == "CTERelationRef":
-            exposed = getattr(self, "_cte_exposed", None)
-            if exposed is not None and not found:
-                exposed[node["cteId"]] = True
+            if not found:
+                self._cte_exposed[node["cteId"]] = True
             return
         if cname == "LateralJoin":
             # the right side is a LateralSubquery EXPRESSION (a field, not a
@@ -897,7 +906,7 @@ class SchemaOnRead:
                 rel.finalized = True
             stack.extend(n["_children"])
             if cls_name(n) == "CTERelationRef":
-                d = getattr(self, "_cte_def_nodes", {}).get(n["cteId"])
+                d = self._cte_def_nodes.get(n["cteId"])
                 if d is not None:
                     stack.append(d)
 

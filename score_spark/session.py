@@ -93,7 +93,8 @@ def get_session(
         # on an sf0.1 measurement ("0.1-0.25 s saved, no effect once
         # partitions carry real data") that turned out to be wrong on both
         # counts. The sf1 stage-timeline probe (SCALE.md "End-to-end
-        # wall-clock at sf1", tools/probe_sf1_top_rows.py) caught the
+        # wall-clock at sf1"; BASELINE.md "sf1 stage-timeline probe
+        # catches a 12-round-old AQE misconfiguration (r13)") caught the
         # override coalescing every post-shuffle stage carrying ~1-64 MB to
         # 1-4 tasks — q04's semi join ran as ONE 3.2 s task on 32 idle
         # cores — and a same-session ABAB at BOTH SFs measured the default
@@ -112,8 +113,8 @@ def get_session(
         # unbounded broadcast hints (VERDICT r2 "Next round" #5)
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # shuffle codec (guide §2.3), decision record in SCALE.md: the sf1
-        # probe (tools/probe_r14_sf1.py codec) measured zstd at 44% fewer
+        # shuffle codec (guide §2.3), decision record in SCALE.md "Shuffle
+        # codec": the sf1 codec probe measured zstd at 44% fewer
         # shuffle bytes (177 -> 99 MB over the d02+d04 suite) but ~0.8 s
         # MORE d02 wall locally — a local[N] "shuffle" never touches a NIC,
         # so compression CPU is pure overhead here. Default stays lz4 for

@@ -36,6 +36,28 @@ def test_all_gated_queries_run_on_empty_tables():
     assert r.returncode == 0, tail
 
 
+def test_profile_query_small_input(spark, sf_dir):
+    """tools/profile_query.py in-process at sf0.001 with one rep, on a
+    memoized query and on a _NO_MEMO one whose build runs jobs (h01
+    persists and writes its xcheck file). It uses the suite's session and
+    leaves it running."""
+    from tools.profile_query import main
+
+    report = main(["q01_pricing_summary", "h01_time_rollup", "--sf", sf_dir, "--reps", "1"])
+    assert set(report) == {"sf_dir", "reps", "conf", "cpus", "load1_start", "queries"}
+    assert list(report["queries"]) == ["q01_pricing_summary", "h01_time_rollup"]
+    for name, q in report["queries"].items():
+        assert set(q) == {
+            "walls", "best", "median", "construct_jobs", "summary", "gap_accounting", "stages"
+        }, name
+        assert len(q["walls"]) == 1 and q["best"] == q["median"] == q["walls"][0]
+        assert {"jobs", "stages", "tasks", "exchanges", "pyudf_nodes", "driver_gap_s"} <= set(q["summary"])
+        assert q["summary"]["stages"] == len(q["stages"]) > 0, name
+        assert q["gap_accounting"]["covered_sec"] <= q["gap_accounting"]["span_sec"], name
+    assert report["queries"]["h01_time_rollup"]["construct_jobs"] >= 1
+    assert not spark.sparkContext._jsc.sc().isStopped()
+
+
 def _top_level_names(path: str) -> set[str]:
     """Names a module binds at top level (defs, classes, assignments,
     imports), including inside top-level if/try/with blocks."""

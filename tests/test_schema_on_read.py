@@ -1757,6 +1757,44 @@ def test_fallback_keeps_its_reason(spark, fx, monkeypatch):
     assert sor.for_paths(path) == full.schema
 
 
+def test_failed_export_names_its_error(spark, fx, monkeypatch, caplog):
+    """When the export call itself fails there is no relation list, so
+    for_paths and for_view raise with ``sor.error`` in the message, and
+    prune() still reads every source in full with one warning each."""
+    import logging
+
+    from score_spark.schema_on_read import generator as G, rewrite
+
+    def broken_export(jplan):
+        raise RuntimeError("exporter unreachable")
+
+    monkeypatch.delenv("SCORE_SPARK_SOR_RAISE", raising=False)
+    monkeypatch.setattr(G, "_export_plan", broken_export)
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    path = fx["sample_parquet"]
+    sor = SchemaOnRead.generate(spark.read.parquet(path).select("struct.col1"))
+    assert sor._failed and sor.error == "RuntimeError: exporter unreachable"
+    with pytest.raises(KeyError, match="the analysis failed: RuntimeError: exporter unreachable"):
+        sor.for_paths(path)
+    with pytest.raises(KeyError, match="exporter unreachable"):
+        sor.for_view("sample_v")
+
+    sources = {"a": rewrite.Source(path), "b": rewrite.Source(fx["partitioned"])}
+
+    def query(t):
+        return t["a"].select("someStr", "struct.col1").join(
+            t["b"].select("someStr", "nestedStruct.str"), "someStr"
+        )
+
+    full = query({name: spark.read.parquet(src.path) for name, src in sources.items()})
+    with caplog.at_level(logging.WARNING, logger=rewrite.__name__):
+        out = rewrite.prune(spark, sources, query)
+    warnings = [r.getMessage() for r in caplog.records if r.name == rewrite.__name__]
+    assert len(warnings) == 2, warnings
+    assert all("exporter unreachable" in w for w in warnings), warnings
+    assert sorted(map(str, out.collect())) == sorted(map(str, full.collect()))
+
+
 def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     """A cold analysis reads the JVM through one PlanExport.export call on
     the worker; the caller makes only the memo lookup's three calls

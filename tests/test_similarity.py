@@ -308,9 +308,10 @@ def test_zero_norm_vectors_never_near_dups(spark):
 def test_recommended_lsh_planes_matches_measured_regimes():
     """The r11 candidate-growth probe's sizing rule as code: expected random
     candidates are L * C(n,2) * p^k, so k must grow ~log(n). The formula
-    must reproduce the two measured operating points (tools/probe_lsh_growth
-    .py): k=16 at n=20k gave ~1.2 candidates/row (the gate/scale family),
-    and k=23 at n=200k gave ~0.2/row while k=20 gave ~1.1/row."""
+    must reproduce the two measured operating points (BASELINE.md
+    "Stateful/window + ANN + sink second decade (r11)"): k=16 at n=20k gave
+    ~1.2 candidates/row (the gate/scale family), and k=23 at n=200k gave
+    ~0.2/row while k=20 gave ~1.1/row."""
     from score_spark.operators.similarity import recommended_lsh_planes
 
     # 20k corpus at ~2/row budget: the shipped 4x16 family

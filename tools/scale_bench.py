@@ -32,7 +32,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
@@ -40,7 +39,7 @@ sys.path.insert(0, REPO_ROOT)
 import pyspark.sql.functions as F  # noqa: N812
 from pyspark.sql import DataFrame, SparkSession
 
-from score_spark import profile
+from tools.profile_query import run_query
 
 WORK_DIR = os.environ.get("SCORE_SPARK_SCALE_DIR", os.path.join(REPO_ROOT, ".scale_fixtures"))
 SEED = 7
@@ -116,42 +115,26 @@ def _materialize(df: DataFrame, path: str) -> None:
 
 
 def _run_op(spark: SparkSession, build, runs: int = 3) -> dict:
-    """Best-of-N wall-clock for build() -> noop write, plus per-stage maxima
-    and total executor run time for the stages the op ran (the completed
-    stages of the best run's jobs). Executor time is the primary SCALING metric on
-    this host: wall-clock of sub-10s runs moves 2-3x with VM steal between
-    back-to-back identical runs (observed), while summed executor time
-    tracks the work actually done."""
-    best, best_stats = None, {}
-    for _ in range(runs):
-        m = profile.mark(spark)
-        t0 = time.monotonic()
-        build().write.format("noop").mode("overwrite").save()
-        elapsed = time.monotonic() - t0
-        new = profile.stages_since(spark, m)
-        stats = {
-            "max_stage_input_mb": round(max((s["input_bytes"] for s in new), default=0) / 2**20, 1),
-            "max_stage_shuffle_write_mb": round(
-                max((s["shuffle_write_bytes"] for s in new), default=0) / 2**20, 1
-            ),
-            "executor_sec": round(sum(s["exec_run_s"] for s in new), 2),
-            "gc_sec": round(sum(s["gc_s"] for s in new), 2),
-            "n_stages": len(new),
-        }
-        if best is None or elapsed < best:
-            best, best_stats = elapsed, stats
-        # same inter-query cleanup as bench.py: drop py4j refs, clear cache,
-        # and force a JVM GC so the ContextCleaner reaps the PREVIOUS op's
-        # localCheckpoint blocks — without this, d02/d05's eager checkpoints
-        # accumulate across runs and later ops measure GC thrash as work
-        # (first harness run: d03 read 810 executor-sec, 85x its isolated
-        # cost, entirely attributable to this)
-        import gc
-
-        gc.collect()
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-    return {"sec": round(best, 3), **best_stats}
+    """Best-of-N wall-clock for build() -> noop write (profile_query.run_query:
+    the cache is cleared and the JVM collects between runs, or d02/d05's
+    eager checkpoints pile up and a later op measured 810 executor-sec of GC
+    thrash as work), plus per-stage maxima and summed executor run time over
+    the stages of the best run. Executor time is the primary SCALING metric
+    on this host: wall-clock of sub-10s runs moves 2-3x with VM steal
+    between back-to-back identical runs (observed), while summed executor
+    time tracks the work actually done."""
+    r = run_query(spark, build, runs)
+    stages = r["stages"]
+    return {
+        "sec": r["best"],
+        "max_stage_input_mb": round(max((s["input_bytes"] for s in stages), default=0) / 2**20, 1),
+        "max_stage_shuffle_write_mb": round(
+            max((s["shuffle_write_bytes"] for s in stages), default=0) / 2**20, 1
+        ),
+        "executor_sec": round(sum(s["exec_run_s"] for s in stages), 2),
+        "gc_sec": round(sum(s["gc_s"] for s in stages), 2),
+        "n_stages": len(stages),
+    }
 
 
 def ops(spark: SparkSession, docs_path: str, embs_path: str, events_path: str):
