@@ -17,7 +17,8 @@ source the analysis had collected before it failed (reference: README.md:9,
 SchemaOnReadExtractor.java:154-158). When it had collected none, as when
 the plan export call itself failed, `for_paths` and `for_view` raise a
 KeyError whose message carries `sor.error`; `prune` then reads every source
-in full with one warning each.
+in full with one warning each. When a plan-node handler of the walk raised,
+`sor.error_node` names that node's Catalyst class; it is None otherwise.
 """
 
 from score_spark.schema_on_read.generator import SchemaOnRead

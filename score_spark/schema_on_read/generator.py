@@ -12,6 +12,9 @@ The analysis reads the JVM once: the vendored ``score.sor.PlanExport.export``
 (vendor/plan-export-src, built by vendor/build_plan_export_jar.sh) returns the
 plan JSON plus every file relation's files, root paths and schema in one
 py4j reply, the way the reference reads them in-process as a JVM library.
+The plan JSON is byte-identical to Catalyst's ``toJSON()``, written by the
+exporter's own serializer (``score.sor.PlanJson``) without Catalyst's
+per-node reflection.
 Beyond the three-call memo lookup it is the analyzer's only JVM call; the
 pairing of relations with plan leaves and the walk stay in Python.
 
@@ -339,10 +342,16 @@ class SchemaOnRead:
         # why generate() fell back to full schemas ("Type: message"), None
         # when the analysis succeeded
         self.error: str | None = None
+        # Catalyst class of the plan node whose handler raised, None when
+        # the analysis succeeded or failed outside the walk's handlers (the
+        # export call, the reply parse)
+        self.error_node: str | None = None
         self.duration: float = 0.0
         # phase split of a successful cold analysis (ms): the export round
-        # trip, decoding and parsing its reply, the walk. A memo hit
-        # returns the cached analysis with the timings of its cold run.
+        # trip, decoding and parsing its reply, the walk; serialize_ms is
+        # the JVM's share of export_ms (building the reply), so
+        # export_ms - serialize_ms is the py4j transit. A memo hit returns
+        # the cached analysis with the timings of its cold run.
         self.timings: dict[str, float] = {}
         # relations living inside subquery-expression plans, keyed by the
         # frozenset of their output (jvmId, id) exprIds — order-independent
@@ -411,6 +420,7 @@ class SchemaOnRead:
                 "export_ms": (t_export - t) * 1e3,
                 "parse_ms": (t_parse - t_export) * 1e3,
                 "walk_ms": (time.monotonic() - t_parse) * 1e3,
+                "serialize_ms": payload["serialize_ms"],
             }
             if h is not None:
                 if len(_GENERATE_CACHE) >= 64:
@@ -534,70 +544,97 @@ class SchemaOnRead:
             if not changed:
                 return
 
-    def _mark_upper_most(self, node: Node, found: bool) -> None:
+    def _mark_upper_most(self, root: Node, found: bool) -> None:
         """Root-down pre-pass (SchemaOnReadGenerator.java:66-73): the first
         selection node on each root-to-leaf branch is upper-most — its
-        conditional columns are final output and must stay full."""
-        cname = cls_name(node)
-        if cname == "WithCTE":
-            # defs are logically inlined at their refs: pre-pass only the main
-            # plan here; _visit exposes defs based on where refs sit.
-            children = node["_children"]
-            defs, plan = children[:-1], children[-1]
-            for d in defs:
-                self._cte_def_nodes[d["id"]] = d
-            self._mark_upper_most(plan, found)
-            # REVERSED def order (review r9): refs only point at EARLIER
-            # defs, so exposure discovered while pre-passing a later def
-            # (`WITH a AS (...), b AS (TABLE a) TABLE b` — b's top-level ref
-            # exposes a) must be recorded before a's own pre-pass consumes
-            # it; forward order pre-passed a with found=True and
-            # skeletonized its complex final outputs.
-            for d in reversed(defs):
-                exposed = self._cte_exposed.get(d["id"], False)
-                self._mark_upper_most(d["_children"][0], found=not exposed)
-            return
-        if cname == "CTERelationRef":
-            if not found:
-                self._cte_exposed[node["cteId"]] = True
-            return
-        if cname == "LateralJoin":
-            # the right side is a LateralSubquery EXPRESSION (a field, not a
-            # child), invisible to this pre-pass. Unlike every other subquery
-            # position, lateral outputs ARE user-facing: record the found
-            # state here so _on_LateralJoin can pass it into the subquery
-            # plan's own pre-pass — found=True unconditionally skeletonized a
-            # complex lateral output whenever no defining Project sat above
-            # the LateralJoin (API df.lateralJoin(...); ADVICE r10, confirmed
-            # by execution: struct pruned to struct<>).
-            node["_lateral_found"] = found
-        is_selection = cname in _SELECTION and (cname != "Join" or expr_trees(node.get("condition")))
-        if is_selection and not found:
-            self._state.upper_most.add(id(node))
-            # Only Project and Aggregate fully DEFINE their output; Sort,
-            # Join, Window, and Generate pass their children's columns
-            # through to the final output, so the descent continues and the
-            # first output-defining node below is ALSO upper-most. The
-            # reference stops at the first selection node of any kind
-            # (SchemaOnReadGenerator.java:66-73), which skeletonizes a
-            # complex column projected as final output under e.g. an
-            # orderBy — silent data loss on the pruned re-read (review r7,
-            # confirmed by execution: select('s','x').orderBy('x') pruned s
-            # to struct<>). Deliberate deviation, documented in the module
-            # docstring's deviation list.
-            if cname in ("Project", "Aggregate"):
-                found = True
-        for c in node["_children"]:
-            self._mark_upper_most(c, found)
+        conditional columns are final output and must stay full.
 
-    def _visit(self, node: Node) -> None:
+        Iterative with an explicit stack, like build_tree: a loop of
+        withColumn calls stacks one Project per iteration, and recursing
+        once per level overflowed Python's recursion limit at about 1,000
+        levels (the RecursionError became a silent full-schema fallback).
+        A ``None`` found marks a CTE def whose pre-pass waits until the
+        plan that references it has been pre-passed."""
+        stack: list[tuple[Node, bool | None]] = [(root, found)]
+        while stack:
+            node, found = stack.pop()
+            if found is None:
+                exposed = self._cte_exposed.get(node["id"], False)
+                stack.append((node["_children"][0], not exposed))
+                continue
+            cname = cls_name(node)
+            if cname == "WithCTE":
+                # defs are logically inlined at their refs: pre-pass the main
+                # plan first; _visit exposes defs based on where refs sit.
+                children = node["_children"]
+                defs, plan = children[:-1], children[-1]
+                for d in defs:
+                    self._cte_def_nodes[d["id"]] = d
+                # REVERSED def order (review r9), which the stack gives by
+                # popping: refs only point at EARLIER defs, so exposure
+                # discovered while pre-passing a later def (`WITH a AS (...),
+                # b AS (TABLE a) TABLE b` — b's top-level ref exposes a) must
+                # be recorded before a's own pre-pass consumes it; forward
+                # order pre-passed a with found=True and skeletonized its
+                # complex final outputs.
+                stack.extend((d, None) for d in defs)
+                stack.append((plan, found))
+                continue
+            if cname == "CTERelationRef":
+                if not found:
+                    self._cte_exposed[node["cteId"]] = True
+                continue
+            if cname == "LateralJoin":
+                # the right side is a LateralSubquery EXPRESSION (a field, not
+                # a child), invisible to this pre-pass. Unlike every other
+                # subquery position, lateral outputs ARE user-facing: record
+                # the found state here so _on_LateralJoin can pass it into the
+                # subquery plan's own pre-pass — found=True unconditionally
+                # skeletonized a complex lateral output whenever no defining
+                # Project sat above the LateralJoin (API df.lateralJoin(...);
+                # ADVICE r10, confirmed by execution: struct pruned to
+                # struct<>).
+                node["_lateral_found"] = found
+            is_selection = cname in _SELECTION and (cname != "Join" or expr_trees(node.get("condition")))
+            if is_selection and not found:
+                self._state.upper_most.add(id(node))
+                # Only Project and Aggregate fully DEFINE their output; Sort,
+                # Join, Window, and Generate pass their children's columns
+                # through to the final output, so the descent continues and
+                # the first output-defining node below is ALSO upper-most.
+                # The reference stops at the first selection node of any kind
+                # (SchemaOnReadGenerator.java:66-73), which skeletonizes a
+                # complex column projected as final output under e.g. an
+                # orderBy — silent data loss on the pruned re-read (review
+                # r7, confirmed by execution: select('s','x').orderBy('x')
+                # pruned s to struct<>). Deliberate deviation, documented in
+                # the module docstring's deviation list.
+                if cname in ("Project", "Aggregate"):
+                    found = True
+            stack.extend((c, found) for c in reversed(node["_children"]))
+
+    def _visit(self, root: Node) -> None:
         """Bottom-up (children first) — Catalyst's foreachUp
-        (SchemaOnReadGenerator.java:51)."""
-        for c in node["_children"]:
-            self._visit(c)
-        handler = getattr(self, "_on_" + cls_name(node), None)
-        if handler is not None:
-            handler(node)
+        (SchemaOnReadGenerator.java:51). Iterative for the same reason as
+        _mark_upper_most. A handler that raises names its node in
+        ``error_node``; the innermost one wins when a subquery plan's
+        handler raises inside its enclosing node's handler."""
+        stack: list[tuple[Node, bool]] = [(root, False)]
+        while stack:
+            node, children_done = stack.pop()
+            if not children_done:
+                stack.append((node, True))
+                stack.extend((c, False) for c in reversed(node["_children"]))
+                continue
+            handler = getattr(self, "_on_" + cls_name(node), None)
+            if handler is None:
+                continue
+            try:
+                handler(node)
+            except Exception:
+                if self.error_node is None:
+                    self.error_node = node["class"]
+                raise
 
     # ------------------------------------------------------------- handlers
 

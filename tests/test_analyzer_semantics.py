@@ -235,6 +235,38 @@ def test_deep_chained_plan_does_not_overflow_recursion(spark, arr_path):
     assert pruned["arr"].dataType.elementType.fields == [], pruned.simpleString()
 
 
+def test_deep_synthetic_chain_walks_without_recursion():
+    """The upper-most pre-pass and the bottom-up walk are iterative: on a
+    synthetic chain deeper than the recursion limit (a loop of about 1,000
+    withColumn calls builds plans this deep) both finish, the top Project
+    alone is upper-most, and handlers still run children first. The
+    recursive walks raised RecursionError from about 1,000 levels, which
+    generate() turned into a silent full-schema fallback."""
+    import sys
+
+    from score_spark.schema_on_read.plan_json import build_tree
+
+    logical = "org.apache.spark.sql.catalyst.plans.logical."
+    depth = max(1200, sys.getrecursionlimit() + 200)
+    flat = [{"class": logical + "Project", "num-children": 1, "projectList": [], "tag": "top"}]
+    flat += [{"class": logical + "Filter", "num-children": 1, "condition": []} for _ in range(depth)]
+    flat.append({"class": logical + "Project", "num-children": 1, "projectList": [], "tag": "bottom"})
+    flat.append({"class": logical + "LocalRelation", "num-children": 0, "output": []})
+    root = build_tree(flat)
+
+    seen = []
+
+    class Recording(SchemaOnRead):
+        def _on_Project(self, node):
+            seen.append(node["tag"])
+            super()._on_Project(node)
+
+    sor = Recording()
+    sor._analyze(root, [])
+    assert sor._state.upper_most == {id(root)}
+    assert seen == ["bottom", "top"]
+
+
 # --------------------------------------------------------------- r10 classes
 
 _SCHEMA4 = "s1 struct<a:bigint,b:bigint>, s2 struct<a:bigint,b:bigint>, x bigint"

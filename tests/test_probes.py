@@ -58,6 +58,21 @@ def test_profile_query_small_input(spark, sf_dir):
     assert not spark.sparkContext._jsc.sc().isStopped()
 
 
+def test_plan_corpus_small_subset(spark, sf_dir):
+    """tools/plan_corpus.py in-process at sf0.001 on a few suite queries and
+    family instances (every format, a subquery, a set operation, the
+    3-source join): --check-json finds the exporter's plan JSON equal to
+    toJSON() with no fallback, and --digest gives one SHA-256 per plan."""
+    from tools.plan_corpus import main
+
+    match = r"^suite/q0[1-4]|^(join/v1/parquet|subquery/v0/json|setop/v2/avro)/d3/c4$"
+    checked = main(["--check-json", "--sf", sf_dir, "--match", match])
+    assert checked["plans"] == 6 and checked["failed"] == {} and checked["fallbacks"] == 0, checked
+    digests = main(["--digest", "--sf", sf_dir, "--match", match])["digests"]
+    assert len(digests) == 6 and all(len(sha) == 64 for sha in digests.values())
+    assert not spark.sparkContext._jsc.sc().isStopped()
+
+
 def _top_level_names(path: str) -> set[str]:
     """Names a module binds at top level (defs, classes, assignments,
     imports), including inside top-level if/try/with blocks."""

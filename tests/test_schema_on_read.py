@@ -1757,6 +1757,36 @@ def test_fallback_keeps_its_reason(spark, fx, monkeypatch):
     assert sor.for_paths(path) == full.schema
 
 
+def test_failing_handler_names_its_node(spark, fx, monkeypatch):
+    """With the raise switch off, a plan-node handler that raises falls back
+    to full schemas and ``error_node`` names that node's Catalyst class. It
+    is None on success and when the export call itself failed."""
+    from score_spark.schema_on_read import generator as G
+
+    def broken_handler(self, node):
+        raise ValueError("generate handler broke")
+
+    def broken_export(jplan):
+        raise RuntimeError("exporter unreachable")
+
+    monkeypatch.delenv("SCORE_SPARK_SOR_RAISE", raising=False)
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    path = fx["sample_parquet"]
+    full = spark.read.parquet(path)
+    ok = SchemaOnRead.generate(full.select("someStr", F.explode("someStrArray")))
+    assert ok.error is None and ok.error_node is None
+
+    monkeypatch.setattr(G.SchemaOnRead, "_on_Generate", broken_handler)
+    sor = SchemaOnRead.generate(full.select("someStr", F.explode("someStrArray")).filter("someStr > ''"))
+    assert sor.error == "ValueError: generate handler broke"
+    assert sor.error_node == "org.apache.spark.sql.catalyst.plans.logical.Generate"
+    assert sor.for_paths(path) == full.schema
+
+    monkeypatch.setattr(G, "_export_plan", broken_export)
+    failed = SchemaOnRead.generate(full.select("someLong"))
+    assert failed.error == "RuntimeError: exporter unreachable" and failed.error_node is None
+
+
 def test_failed_export_names_its_error(spark, fx, monkeypatch, caplog):
     """When the export call itself fails there is no relation list, so
     for_paths and for_view raise with ``sor.error`` in the message, and
@@ -1835,27 +1865,102 @@ def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     assert sor.error is None
     assert len(sor.relations) == 3 and len(sor._subq_rels) == 2
     assert sor.for_paths(fx["sample_parquet"])["struct"].dataType.fieldNames() == ["col1", "col3"]
-    assert set(sor.timings) == {"export_ms", "parse_ms", "walk_ms"}
+    assert set(sor.timings) == {"export_ms", "parse_ms", "walk_ms", "serialize_ms"}
     assert all(v > 0 for v in sor.timings.values())
-    assert sum(sor.timings.values()) <= sor.duration * 1e3
+    # serialize_ms is the JVM's share of export_ms; the other three are disjoint
+    assert sor.timings["serialize_ms"] <= sor.timings["export_ms"]
+    assert sor.timings["export_ms"] + sor.timings["parse_ms"] + sor.timings["walk_ms"] <= sor.duration * 1e3
 
 
 def test_plan_export_jar_matches_its_source():
-    """The committed jar was built from the committed source: the build
-    script stores the source's SHA-256 in the jar. Re-run
-    vendor/build_plan_export_jar.sh after editing vendor/plan-export-src."""
+    """The committed jar was built from the committed sources: the build
+    script stores a sorted SHA-256 manifest of every *.java under
+    vendor/plan-export-src in the jar. Re-run vendor/build_plan_export_jar.sh
+    after editing any of them."""
+    import glob
     import hashlib
     import zipfile
 
     from score_spark.schema_on_read import generator as G
 
-    src = os.path.join(os.path.dirname(G._PLAN_EXPORT_JAR), "plan-export-src", "score", "sor", "PlanExport.java")
-    with open(src, "rb") as fh:
-        want = hashlib.sha256(fh.read()).hexdigest()
+    src_root = os.path.join(os.path.dirname(G._PLAN_EXPORT_JAR), "plan-export-src")
+    sources = sorted(
+        os.path.relpath(p, src_root) for p in glob.glob(os.path.join(src_root, "**", "*.java"), recursive=True)
+    )
+    assert "score/sor/PlanExport.java" in sources and "score/sor/PlanJson.java" in sources
+    want = []
+    for rel in sources:
+        with open(os.path.join(src_root, rel), "rb") as fh:
+            want.append(f"{hashlib.sha256(fh.read()).hexdigest()}  {rel}")
     with zipfile.ZipFile(G._PLAN_EXPORT_JAR) as jar:
-        built_from = jar.read("score/sor/PlanExport.java.sha256").decode().strip()
-        assert "score/sor/PlanExport.class" in jar.namelist()
+        built_from = jar.read("score/sor/sources.sha256").decode().splitlines()
+        classes = {n for n in jar.namelist() if n.endswith(".class")}
+    assert {"score/sor/PlanExport.class", "score/sor/PlanJson.class"} <= classes
     assert built_from == want, "vendor/score-spark-plan-export.jar is stale: run vendor/build_plan_export_jar.sh"
+
+
+def test_exporter_plan_json_is_catalysts_to_json(spark, fx):
+    """The exporter writes the plan JSON itself (score.sor.PlanJson); on
+    every plan shape here its reply carries plan.toJSON()'s exact string,
+    with no subtree or value handed back to Catalyst."""
+    from pyspark.sql import Window
+
+    from tools.plan_corpus import check_json
+
+    path = fx["sample_parquet"]
+    spark.read.parquet(path).createOrReplaceTempView("pj_a")
+    spark.read.parquet(fx["partitioned"]).createOrReplaceTempView("pj_b")
+    base = spark.read.parquet(path)
+    deep = base
+    for i in range(400):
+        deep = deep.withColumn(f"c{i}", F.col("someLong") + i)
+    odd_name = 'we"ird\\name\n\t\x01é✓'
+    plans = {
+        "subqueries": spark.sql(
+            "SELECT a.someStr, (SELECT max(someLong) FROM pj_b) AS mx FROM pj_a a "
+            "WHERE a.someLong IN (SELECT struct.col2 FROM pj_b) "
+            "AND EXISTS (SELECT 1 FROM pj_b b WHERE b.someStr = a.someStr)"
+        ),
+        "cte": spark.sql(
+            "WITH c AS (SELECT someStr, struct.col1 AS v FROM pj_a WHERE someLong > 0) "
+            "SELECT x.someStr, sum(y.v) FROM c x JOIN c y ON x.someStr = y.someStr GROUP BY x.someStr"
+        ),
+        "lambdas": base.select(
+            F.transform("someComplexArray", lambda e: e["col1"] + 1).alias("t"),
+            F.filter("struct.subArray", lambda x: x > 1).alias("f"),
+            F.aggregate("struct.subArray", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("agg"),
+            F.exists("someArrayOfArrays", lambda a: F.size(a) > 2).alias("e"),
+        ),
+        "rollup": base.rollup("someStr", "struct.col1").agg(F.sum("someLong")),
+        "cube": base.cube("someStr", "someBoolean").count(),
+        "generate": base.select("someStr", F.posexplode("someComplexArray")).select("someStr", "pos", "col.col2"),
+        "window": base.select(
+            "someStr",
+            F.row_number().over(Window.partitionBy("someStr").orderBy(F.col("struct.col2").desc())).alias("rk"),
+        ),
+        "literals": base.select(
+            F.lit(12.345).cast("decimal(10,3)").alias("dec"),
+            F.lit("2024-02-29").cast("date").alias("d"),
+            F.lit("2024-02-29 12:34:56").cast("timestamp").alias("ts"),
+            F.array(F.lit(1), F.lit(2)).alias("arr"),
+            F.create_map(F.lit("k"), F.lit(1.5)).alias("m"),
+            F.lit(None).cast("string").alias("nul"),
+            F.lit('quote " backslash \\ newline \n tab \t ctl \x01').alias("s"),
+            F.col("someStr").alias(odd_name),
+        ).filter(F.col(odd_name).isNotNull()),
+        "sample": base.sample(withReplacement=False, fraction=0.37, seed=3).select("someStr"),
+        "deep_400": deep.select("someLong"),
+    }
+    spark.sql(
+        "SELECT array(1, 2) a, map('k', 2.5D) m, DATE'2024-01-01' d, TIMESTAMP'2024-01-01 00:00:00' t, "
+        "CAST(1.5 AS DECIMAL(20, 4)) x, X'0A0B' b, NULL n"
+    ).createOrReplaceTempView("pj_lit")
+    plans["sql_literals"] = spark.sql("SELECT * FROM pj_lit")
+    for name, df in plans.items():
+        same, fallbacks, where = check_json(df)
+        assert same, f"{name}: {where}"
+        assert fallbacks == 0, name
+
 
 
 def test_plain_session_attaches_the_exporter(tmp_path):
