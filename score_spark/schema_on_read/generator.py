@@ -15,8 +15,10 @@ py4j reply, the way the reference reads them in-process as a JVM library.
 The plan JSON is byte-identical to Catalyst's ``toJSON()``, written by the
 exporter's own serializer (``score.sor.PlanJson``) without Catalyst's
 per-node reflection.
-Beyond the three-call memo lookup it is the analyzer's only JVM call; the
-pairing of relations with plan leaves and the walk stay in Python.
+Beyond the three-call memo lookup it is the analyzer's only JVM call. The
+reply keys every file relation, in the main plan or in a subquery plan, by
+the exprIds of its output, which the plan JSON carries too; the walk, in
+Python, finds each ``LogicalRelation`` leaf's relation by that one key.
 
 Architectural deviation from the reference (deliberate, SURVEY.md §7):
 attributes are tracked by Catalyst **exprId** straight from the analyzed-plan
@@ -45,7 +47,6 @@ import logging
 import os
 import threading
 import time
-from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
@@ -353,15 +354,11 @@ class SchemaOnRead:
         # export_ms - serialize_ms is the py4j transit. A memo hit returns
         # the cached analysis with the timings of its cold run.
         self.timings: dict[str, float] = {}
-        # relations living inside subquery-expression plans, keyed by the
-        # frozenset of their output (jvmId, id) exprIds — order-independent
-        # pairing, unlike the main plan's k-th-leaf iterator (review r10)
-        self._subq_rels: dict[frozenset, dict[str, Any] | None] = {}
-        self._subq_depth = 0
-        # walk state: the main plan's file relations in collectLeaves()
-        # order, CTE def nodes by cteId, and which defs a ref exposes as
+        # every file relation of the export reply, main plan and subquery
+        # plans alike, keyed by its output exprIds (_keyed_relations)
+        self._rels: dict[Any, dict[str, Any] | None] = {}
+        # walk state: CTE def nodes by cteId, and which defs a ref exposes as
         # final output
-        self._rel_iter: Iterator[dict[str, Any] | None] = iter(())
         self._cte_def_nodes: dict[int, Node] = {}
         self._cte_exposed: dict[int, bool] = {}
 
@@ -392,7 +389,6 @@ class SchemaOnRead:
             pass  # py4j hiccup: fall through to a full uncached generate
 
         self = cls()
-        relations: list[dict[str, Any] | None] = []
         try:
             # the analysis's one py4j round trip: PlanExport.export returns
             # the plan JSON plus every file relation's files, roots and
@@ -411,11 +407,10 @@ class SchemaOnRead:
             reply = _plan_json_pool().submit(_export_plan, jplan).result()
             t_export = time.monotonic()
             payload = json.loads(reply)
-            relations = _collect_jvm_relations(payload)
-            self._subq_rels = _collect_jvm_subquery_relations(payload)
+            self._rels = {**_collect_jvm_relations(payload), **_collect_jvm_subquery_relations(payload)}
             root = build_tree(payload["plan"])
             t_parse = time.monotonic()
-            self._analyze(root, relations)
+            self._analyze(root)
             self.timings = {
                 "export_ms": (t_export - t) * 1e3,
                 "parse_ms": (t_parse - t_export) * 1e3,
@@ -434,11 +429,12 @@ class SchemaOnRead:
                 raise
             self._failed = True
             self.error = f"{type(e).__name__}: {e}"
-            # relations the walk never reached still answer for_paths()
-            # with their full schema
-            for info in (*relations, *self._subq_rels.values()):
-                if info is not None:
-                    self._relation(info)
+        # relations the walk never registered (a zero-column relation's leaf
+        # pairs with nothing; a failed walk stops early) still answer
+        # for_paths() with their full schema
+        for info in self._rels.values():
+            if info is not None:
+                self._relation(info)
         self.duration = time.monotonic() - t0
         return self
 
@@ -483,8 +479,7 @@ class SchemaOnRead:
 
     # ------------------------------------------------------- plan traversal
 
-    def _analyze(self, root: Node, relations: list[dict[str, Any]]) -> None:
-        self._rel_iter = iter(relations)
+    def _analyze(self, root: Node) -> None:
         self._mark_upper_most(root, found=False)
         self._visit(root)
         self._merge_setop_groups()
@@ -639,37 +634,26 @@ class SchemaOnRead:
     # ------------------------------------------------------------- handlers
 
     def _on_LogicalRelation(self, node: Node) -> None:
-        # Pair the k-th JSON LogicalRelation with the k-th JVM one (both
-        # walks are pre-order over the same tree; _visit is post-order but
-        # leaf order is preserved). Relations inside subquery-expression
-        # plans are invisible to the main plan's collectLeaves(), so they
-        # pair through the exprId-keyed side channel instead (review r10).
-        if self._subq_depth > 0:
-            key = frozenset(
-                eid
-                for out in expr_trees(node.get("output"))
-                if (eid := expr_id(out)) is not None
-            )
-            if key not in self._subq_rels:
-                # pairing failed — raising here reaches generate()'s
-                # best-effort fallback (full schemas), never silent under-keep
-                raise ValueError(
-                    "subquery relation not found in JVM subqueriesAll pairing"
-                )
-            info = self._subq_rels[key]
-        else:
-            info = next(self._rel_iter)
+        # The leaf's relation is the reply entry keyed by the leaf's output
+        # exprIds, wherever the leaf sits (main plan, CTE def or subquery
+        # plan). A missing key raises into generate()'s best-effort fallback
+        # (full schemas), never a silent under-keep.
+        outs = [(eid, out) for out in expr_trees(node.get("output")) if (eid := expr_id(out)) is not None]
+        key = frozenset(eid for eid, _ in outs)
+        if key and key not in self._rels:
+            raise ValueError("file relation not found in the export reply")
+        # None: a non-file relation (JDBC etc.), or a zero-column leaf whose
+        # empty key pairs with nothing — both ignored, like LocalRelation
+        info = self._rels.get(key)
         st = self._state
-        if info is None:  # non-file relation (JDBC etc.) — ignore, like LocalRelation
+        if info is None:
             st.current_relation = None
             return
         rel = self._relation(info)
         st.current_relation = rel
         node["_rel"] = rel
-        for out in expr_trees(node.get("output")):
-            eid = expr_id(out)
-            if eid is not None:
-                st.exprid_map.setdefault(eid, []).append(Handle(rel.trie, out["name"].lower()))
+        for eid, out in outs:
+            st.exprid_map.setdefault(eid, []).append(Handle(rel.trie, out["name"].lower()))
 
     def _relation(self, info: dict[str, Any]) -> RelationInfo:
         """The one RelationInfo of a collected file relation, created on
@@ -753,9 +737,8 @@ class SchemaOnRead:
     def _on_LateralJoin(self, node: Node) -> None:
         # SQL `FROM t, LATERAL (SELECT ...)`: the right side is a
         # LateralSubquery EXPRESSION carrying its plan — same channel as
-        # scalar/IN subqueries (r10). Walking it routes through
-        # _visit_subquery; the lateral's output exprIds are the inner
-        # plan's own outputs, so outer references resolve normally.
+        # scalar/IN subqueries (r10); the lateral's output exprIds are the
+        # inner plan's own outputs, so outer references resolve normally.
         # found passthrough (ADVICE r10): lateral outputs are the one
         # subquery position that IS user-facing, so the subquery plan's
         # pre-pass gets the LateralJoin's own found state (recorded by
@@ -763,13 +746,7 @@ class SchemaOnRead:
         # other subquery position correctly uses.
         found = node.get("_lateral_found", True)
         for e in expr_trees(node.get("right")):
-            subplans = expr_trees(e.get("plan")) if "plan" in e else []
-            if subplans:
-                for sp in subplans:
-                    self._visit_subquery(sp, "touch", found=found)
-                for c in e["_children"]:  # outer refs
-                    self._walk_expr(c, "touch")
-            else:
+            if self._walk_subquery(e, "touch", found) is None:
                 self._walk_expr(e, "touch")
         for e in expr_trees(node.get("condition")):
             self._walk_expr(e, "touch")
@@ -934,10 +911,18 @@ class SchemaOnRead:
 
     def _finalize(self, node: Node) -> None:
         """Selection-node exit: every relation below now has an owner —
-        eligible for pruned emission (TreeNodeProcessingRegistry.java:108-115)."""
+        eligible for pruned emission (TreeNodeProcessingRegistry.java:108-115).
+
+        Each node is marked once: a marked node's subtree, CTE defs reached
+        through its refs included, was marked with it, so the descent stops
+        there and a chain of selection nodes costs linear, not quadratic,
+        time."""
         stack = [node]
         while stack:
             n = stack.pop()
+            if "_finalized" in n:
+                continue
+            n["_finalized"] = True
             rel = n.get("_rel")
             if rel is not None:
                 rel.finalized = True
@@ -1002,21 +987,13 @@ class SchemaOnRead:
         # plan walker never sees it — before r10 the inner plan's column
         # uses were silently absent from the pruned schema (confirmed by
         # execution: `WHERE s1 IN (SELECT s2 FROM t)` dropped s2 entirely).
-        # Visit the nested plan, then bind to its outputs at `mode` — an
-        # InSubquery's ListQuery arrives already in require mode via
-        # _VALUE_COMPARISON_EXPRS, so IN-compared outputs stay full.
-        subplans = expr_trees(expr.get("plan")) if "plan" in expr else []
-        if subplans or cname in _SUBQUERY_PLAN_EXPRS:
-            if not subplans:
-                raise ValueError(
-                    f"subquery expression {cname} carries no parseable plan"
-                )
-            handles = []
-            for sp in subplans:
-                handles.extend(self._visit_subquery(sp, mode))
-            for c in expr["_children"]:  # outer refs / join conds
-                self._walk_expr(c, mode)
-            return handles
+        # _walk_subquery visits the nested plan, then binds to its outputs
+        # at `mode` — an InSubquery's ListQuery arrives already in require
+        # mode via _VALUE_COMPARISON_EXPRS, so IN-compared outputs stay full.
+        if "plan" in expr or cname in _SUBQUERY_PLAN_EXPRS:
+            handles = self._walk_subquery(expr, mode)
+            if handles is not None:
+                return handles
         # a DISTINCT aggregate observes whole-value equality of its inputs
         # (count(DISTINCT s) over structs pruned to a field subset counts
         # the wrong groups) — the flag lives on the AggregateExpression
@@ -1272,6 +1249,23 @@ class SchemaOnRead:
         # (duplicate handles are harmless: materialize/require idempotent)
         return bind + last
 
+    def _walk_subquery(self, expr: Node, mode: str, found: bool = True) -> list[Handle] | None:
+        """A subquery expression: visit each nested plan (_visit_subquery),
+        then walk the expression's children (outer refs, join conditions).
+        Returns the plans' output handles, or None when ``expr`` carries no
+        plan and is no known subquery class — a plain expression."""
+        subplans = expr_trees(expr.get("plan"))
+        if not subplans:
+            if (cname := cls_name(expr)) in _SUBQUERY_PLAN_EXPRS:
+                raise ValueError(f"subquery expression {cname} carries no parseable plan")
+            return None
+        handles: list[Handle] = []
+        for sp in subplans:
+            handles.extend(self._visit_subquery(sp, mode, found))
+        for c in expr["_children"]:
+            self._walk_expr(c, mode)
+        return handles
+
     def _visit_subquery(self, sp: Node, mode: str, found: bool = True) -> list[Handle]:
         """Visit a subquery expression's nested logical plan (review r10).
 
@@ -1286,12 +1280,10 @@ class SchemaOnRead:
         to the subquery's relation."""
         st = self._state
         saved = st.current_relation
-        self._subq_depth += 1
         try:
             self._mark_upper_most(sp, found=found)
             self._visit(sp)
         finally:
-            self._subq_depth -= 1
             st.current_relation = saved
         handles: list[Handle] = []
         for eid in _node_output(sp):
@@ -1376,14 +1368,29 @@ def _node_output(node: Node) -> list[tuple[str, int]]:
     return []
 
 
-def _collect_jvm_relations(payload: dict[str, Any]) -> list[dict[str, Any] | None]:
-    """The main plan's file relations from an export reply, in the order of
-    its LogicalRelation leaves (collectLeaves() pre-order, the JSON walker's
-    encounter order); None for a non-file relation. The plan JSON drops the
-    relation object, so this is where each leaf's paths and full schema come
-    from. Identity = sorted qualified input files
+def _collect_jvm_relations(payload: dict[str, Any]) -> dict[Any, dict[str, Any] | None]:
+    """The main plan's file relations from an export reply."""
+    return _keyed_relations(payload["relations"])
+
+
+def _collect_jvm_subquery_relations(payload: dict[str, Any]) -> dict[Any, dict[str, Any] | None]:
+    """The file relations inside subquery-EXPRESSION plans (review r10),
+    which the main plan's collectLeaves() never reaches: the nested plan is
+    an expression field, not a plan child."""
+    return _keyed_relations(payload["subquery_relations"])
+
+
+def _keyed_relations(entries: list[dict[str, Any]]) -> dict[Any, dict[str, Any] | None]:
+    """Export-reply relation entries as {key: info}. The key is the
+    frozenset of the leaf's output (jvmId, id) exprIds: unique per relation
+    instance, and the plan JSON carries the same ids, so _on_LogicalRelation
+    finds any leaf's entry by it. A zero-column relation's key is empty and
+    pairs with no leaf; it is kept under its entry's id() so that two of
+    them never share a slot. The plan JSON drops the relation object, so
+    this is where each leaf's paths and full schema come from; None for a
+    non-file relation. Identity = sorted qualified input files
     (SchemaOnReadState.java:80-95,122-126)."""
-    return [_relation_info(r) for r in payload["relations"]]
+    return {frozenset(map(tuple, e["key"])) or id(e): _relation_info(e["rel"]) for e in entries}
 
 
 def _relation_info(rel: dict[str, Any] | None) -> dict[str, Any] | None:
@@ -1393,20 +1400,4 @@ def _relation_info(rel: dict[str, Any] | None) -> dict[str, Any] | None:
         "ref": tuple(sorted(rel["files"])),
         "root_paths": tuple(rel["roots"]),
         "schema": T.StructType.fromJson(rel["schema"]),
-    }
-
-
-def _collect_jvm_subquery_relations(payload: dict[str, Any]) -> dict[frozenset, dict[str, Any] | None]:
-    """Relations inside subquery-EXPRESSION plans (review r10), from an
-    export reply.
-
-    collectLeaves() never descends into subquery expressions (the nested
-    plan is an expression field, not a plan child), so these relations need
-    their own channel. The k-th-leaf order pairing doesn't extend across
-    that boundary robustly; instead each relation is keyed by the frozenset
-    of its output attributes' (jvmId, id) exprIds — globally unique per
-    relation instance, and the plan JSON carries the same ids."""
-    return {
-        frozenset((jvm_id, i) for jvm_id, i in sub["key"]): _relation_info(sub["rel"])
-        for sub in payload["subquery_relations"]
     }

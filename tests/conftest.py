@@ -21,6 +21,11 @@ SF_DIR = os.environ.get("SCORE_SPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
 # oracle runs read the channel the in-suite queries wrote
 os.environ.setdefault("SCORE_SPARK_ORACLE_SF_DIR", SF_DIR)
 
+# an analyzer failure raises instead of falling back to full schemas, so a
+# walker bug cannot pass a test (or a fuzz example) behind the fallback;
+# tests of the fallback itself delete it with monkeypatch
+os.environ.setdefault("SCORE_SPARK_SOR_RAISE", "1")
+
 
 @pytest.fixture(scope="session")
 def spark():

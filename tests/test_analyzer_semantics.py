@@ -24,9 +24,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-os.environ.setdefault("SCORE_SPARK_SOR_RAISE", "1")
-
-from score_spark.schema_on_read.generator import SchemaOnRead  # noqa: E402
+from score_spark.schema_on_read.generator import SchemaOnRead
 
 _SCHEMA2 = "s1 struct<a:bigint,b:bigint>, s2 struct<a:bigint,b:bigint>"
 _ROWS2 = [
@@ -262,9 +260,41 @@ def test_deep_synthetic_chain_walks_without_recursion():
             super()._on_Project(node)
 
     sor = Recording()
-    sor._analyze(root, [])
+    sor._analyze(root)
     assert sor._state.upper_most == {id(root)}
     assert seen == ["bottom", "top"]
+
+
+def test_finalize_is_linear_in_chain_depth(monkeypatch):
+    """Every selection node finalizes the relations below it. Re-walking
+    the whole subtree at each one made a chain of Projects quadratic:
+    503,502 cls_name calls at depth 1,000 and 2,007,002 at 2,000. Each node
+    is now finalized once. Counted calls, not wall time."""
+    from score_spark.schema_on_read import generator as G
+    from score_spark.schema_on_read.plan_json import build_tree
+
+    logical = "org.apache.spark.sql.catalyst.plans.logical."
+    calls = 0
+    real = G.cls_name
+
+    def counting(node):
+        nonlocal calls
+        calls += 1
+        return real(node)
+
+    monkeypatch.setattr(G, "cls_name", counting)
+
+    def cost(depth):
+        nonlocal calls
+        flat = [{"class": logical + "Project", "num-children": 1, "projectList": []} for _ in range(depth)]
+        flat.append({"class": logical + "LocalRelation", "num-children": 0, "output": []})
+        root = build_tree(flat)
+        calls = 0
+        SchemaOnRead()._analyze(root)
+        return calls
+
+    at_1000, at_2000 = cost(1000), cost(2000)
+    assert at_2000 <= 2.2 * at_1000, (at_1000, at_2000)
 
 
 # --------------------------------------------------------------- r10 classes

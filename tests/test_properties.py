@@ -541,6 +541,17 @@ def _record_upstream_bug(plan: dict, error: str, pruned_leg_ok: bool) -> None:
         f.write(_json.dumps(entry, sort_keys=True) + "\n")
 
 
+def _generate(df):
+    """SchemaOnRead.generate that fails the example on a fallback: with the
+    raise switch off (tools/fuzz_hunt.py) a walker failure would otherwise
+    return full schemas and pass the pruned-equals-full check."""
+    from score_spark.schema_on_read.generator import SchemaOnRead
+
+    sor = SchemaOnRead.generate(df)
+    assert sor.error is None, f"analysis fell back to full schemas: {sor.error}"
+    return sor
+
+
 def _assert_pruned_matches_full(pruned_df, full_df, plan: dict) -> None:
     """The fuzz invariant, with the upstream-crash policy: if the FULL
     (reference) leg dies on a Spark INTERNAL_ERROR, that is an engine bug
@@ -569,7 +580,6 @@ def _assert_pruned_matches_full(pruned_df, full_df, plan: dict) -> None:
 @given(data=st.data())
 def test_pruned_reread_equals_full_for_random_plans(spark, fuzz_paths, data):
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     fmt = data.draw(st.sampled_from(["parquet", "json"]), label="format")
     preds = data.draw(
@@ -677,7 +687,7 @@ def test_pruned_reread_equals_full_for_random_plans(spark, fuzz_paths, data):
         return r.parquet(path)
 
     full_df = pipeline(read(SAMPLE_SCHEMA))
-    pruned_schema = SchemaOnRead.generate(full_df).for_paths(path)
+    pruned_schema = _generate(full_df).for_paths(path)
     pruned_df = pipeline(read(pruned_schema))
     _assert_pruned_matches_full(pruned_df, full_df, {
         "test": "single_source", "format": fmt,
@@ -706,7 +716,6 @@ def test_pruned_read_survives_upstream_generate_codegen_hole(spark, fuzz_paths):
     bug, both legs run and must agree row-for-row. Report text:
     tools/UPSTREAM_SPARK_BUG.md."""
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     def pipeline(df):
         df = df.withColumn("ex_subarr", F.explode_outer(F.col("struct.subArray")))
@@ -720,7 +729,7 @@ def test_pruned_read_survives_upstream_generate_codegen_hole(spark, fuzz_paths):
 
     path = fuzz_paths["parquet"]
     full_df = pipeline(spark.read.schema(SAMPLE_SCHEMA).parquet(path))
-    pruned_schema = SchemaOnRead.generate(full_df).for_paths(path)
+    pruned_schema = _generate(full_df).for_paths(path)
     pruned_df = pipeline(spark.read.schema(pruned_schema).parquet(path))
     pruned_rows = _canon_rows(pruned_df)  # the workaround leg must execute
     assert len(pruned_rows) > 0
@@ -745,7 +754,6 @@ def test_pruned_reread_equals_full_for_random_multi_source_plans(spark, fuzz_pat
     (ref :1162-1188's InMemoryRelation class) — the analyzer must trace
     THROUGH the cached plan to the file relation beneath."""
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     shape = data.draw(
         st.sampled_from(["union", "unionByName", "intersect", "except", "join", "cte"]),
@@ -828,7 +836,7 @@ def test_pruned_reread_equals_full_for_random_multi_source_plans(spark, fuzz_pat
         return df
 
     full_df = pipeline(SAMPLE_SCHEMA, SAMPLE_SCHEMA)
-    sor = SchemaOnRead.generate(full_df)
+    sor = _generate(full_df)
 
     def derived(path):
         try:
@@ -909,7 +917,6 @@ _SQL_PREDICATES = [
 @given(data=st.data())
 def test_pruned_reread_equals_full_for_random_sql_plans(spark, fuzz_paths, data):
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     fmt = data.draw(st.sampled_from(["parquet", "json"]), label="format")
     explodes = data.draw(
@@ -1042,13 +1049,13 @@ def test_pruned_reread_equals_full_for_random_sql_plans(spark, fuzz_paths, data)
 
     if mode in ("join2", "union2"):
         full_df = run(SAMPLE_SCHEMA, SAMPLE_SCHEMA)
-        sor = SchemaOnRead.generate(full_df)
+        sor = _generate(full_df)
         pruned_main = sor.for_paths(path)
         pruned_df = run(pruned_main, sor.for_paths(fuzz_paths[other]))
         pruned_simple = pruned_main.simpleString()
     else:
         full_df = run(SAMPLE_SCHEMA)
-        pruned_main = SchemaOnRead.generate(full_df).for_paths(path)
+        pruned_main = _generate(full_df).for_paths(path)
         pruned_df = run(pruned_main)
         pruned_simple = pruned_main.simpleString()
     _assert_pruned_matches_full(pruned_df, full_df, {
@@ -1115,7 +1122,6 @@ def crazy_fuzz_paths(spark, tmp_path_factory):
 @given(data=st.data())
 def test_pruned_reread_equals_full_for_random_map_plans(spark, crazy_fuzz_paths, data):
     from tests.fixtures_nested import CRAZY_MAP_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     fmt = data.draw(st.sampled_from(["parquet", "json"]), label="format")
     explodes = data.draw(
@@ -1158,7 +1164,7 @@ def test_pruned_reread_equals_full_for_random_map_plans(spark, crazy_fuzz_paths,
         return r.parquet(path)
 
     full_df = pipeline(read(CRAZY_MAP_SCHEMA))
-    pruned_schema = SchemaOnRead.generate(full_df).for_paths(path)
+    pruned_schema = _generate(full_df).for_paths(path)
     pruned_df = pipeline(read(pruned_schema))
     _assert_pruned_matches_full(pruned_df, full_df, {
         "test": "map_plans", "format": fmt,
@@ -1193,7 +1199,6 @@ def test_streaming_pruned_schema_equals_batch_for_random_plans(spark, fuzz_paths
     import tempfile
 
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
     from score_spark.streaming.windows import run_stream_once
 
     preds = data.draw(
@@ -1233,7 +1238,7 @@ def test_streaming_pruned_schema_equals_batch_for_random_plans(spark, fuzz_paths
 
     path = fuzz_paths["parquet"]
     batch_df = pipeline(spark.read.schema(SAMPLE_SCHEMA).parquet(path))
-    pruned_schema = SchemaOnRead.generate(batch_df).for_paths(path)
+    pruned_schema = _generate(batch_df).for_paths(path)
 
     plan = {
         "test": "streaming", "filters": [n for n, _ in preds],
@@ -1387,7 +1392,6 @@ def _build_spec(spec):
 @given(data=st.data())
 def test_pruned_reread_equals_full_for_expression_grammar(spark, fuzz_paths, data):
     from tests.fixtures_nested import SAMPLE_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     depth = data.draw(st.integers(1, 4), label="depth")
     out_cat = data.draw(st.sampled_from(["STRUCT", "ARRSTRUCT", "PRIM"]), label="out_cat")
@@ -1417,7 +1421,7 @@ def test_pruned_reread_equals_full_for_expression_grammar(spark, fuzz_paths, dat
         return spark.read.schema(schema).parquet(path)
 
     full_df = pipeline(read(SAMPLE_SCHEMA))
-    pruned_schema = SchemaOnRead.generate(full_df).for_paths(path)
+    pruned_schema = _generate(full_df).for_paths(path)
     pruned_df = pipeline(read(pruned_schema))
     _assert_pruned_matches_full(pruned_df, full_df, {
         "test": "expression_grammar", "depth": depth, "out_cat": out_cat,
@@ -1508,7 +1512,6 @@ def _mbuild(spec):
 @given(data=st.data())
 def test_pruned_reread_equals_full_for_map_grammar(spark, crazy_fuzz_paths, data):
     from tests.fixtures_nested import CRAZY_MAP_SCHEMA
-    from score_spark.schema_on_read.generator import SchemaOnRead
 
     depth = data.draw(st.integers(1, 3), label="depth")
     out_cat = data.draw(st.sampled_from(["MAP", "ARRSTRUCT", "STRUCT", "PRIM"]), label="out_cat")
@@ -1523,7 +1526,7 @@ def test_pruned_reread_equals_full_for_map_grammar(spark, crazy_fuzz_paths, data
 
     path = crazy_fuzz_paths["parquet"]
     full_df = pipeline(spark.read.schema(CRAZY_MAP_SCHEMA).parquet(path))
-    pruned_schema = SchemaOnRead.generate(full_df).for_paths(path)
+    pruned_schema = _generate(full_df).for_paths(path)
     pruned_df = pipeline(spark.read.schema(pruned_schema).parquet(path))
     _assert_pruned_matches_full(pruned_df, full_df, {
         "test": "map_grammar", "depth": depth, "out_cat": out_cat,

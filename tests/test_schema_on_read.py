@@ -18,6 +18,8 @@ Deliberate deviations (exprId tracking instead of SQL-string parsing):
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -34,11 +36,6 @@ def fx(spark, tmp_path_factory):
 @pytest.fixture(scope="session")
 def sample(spark, fx):
     return spark.read.parquet(fx["sample_parquet"])
-
-
-import os
-
-os.environ.setdefault("SCORE_SPARK_SOR_RAISE", "1")
 
 
 def gen(df):
@@ -1863,13 +1860,85 @@ def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     assert worker == 1, calls
     assert calls[threading.current_thread().name] <= 3, calls
     assert sor.error is None
-    assert len(sor.relations) == 3 and len(sor._subq_rels) == 2
+    assert len(sor.relations) == 3 and len(sor._rels) == 5
     assert sor.for_paths(fx["sample_parquet"])["struct"].dataType.fieldNames() == ["col1", "col3"]
     assert set(sor.timings) == {"export_ms", "parse_ms", "walk_ms", "serialize_ms"}
     assert all(v > 0 for v in sor.timings.values())
     # serialize_ms is the JVM's share of export_ms; the other three are disjoint
     assert sor.timings["serialize_ms"] <= sor.timings["export_ms"]
     assert sor.timings["export_ms"] + sor.timings["parse_ms"] + sor.timings["walk_ms"] <= sor.duration * 1e3
+
+
+# ------------------------------------------- relation pairing by exprId key
+
+
+def test_zero_column_relations_stay_apart(spark, fx):
+    """A relation read with an empty schema has no output exprIds, so its
+    leaf has no key to find its reply entry by. Two of them must not
+    cross-wire: each is registered after the walk and for_paths returns its
+    full (empty) schema. An alias over one binds nothing, so for_view
+    raises KeyError."""
+    empty = T.StructType([])
+    a = spark.read.schema(empty).parquet(fx["sample_parquet"])
+    b = spark.read.schema(empty).parquet(fx["crazy_parquet"])
+    df = a.crossJoin(b)
+    sor = gen(df)
+    assert sor.error is None
+    assert len(sor.relations) == 2
+    assert sor.for_paths(fx["sample_parquet"]) == empty
+    assert sor.for_paths(fx["crazy_parquet"]) == empty
+    pruned = spark.read.schema(sor.for_paths(fx["sample_parquet"])).parquet(fx["sample_parquet"])
+    assert pruned.crossJoin(b).count() == df.count()
+
+    a.createOrReplaceTempView("zero_cols")
+    sor = gen(spark.sql("SELECT * FROM zero_cols"))
+    assert sor.for_paths(fx["sample_parquet"]) == empty
+    with pytest.raises(KeyError):
+        sor.for_view("zero_cols")
+
+
+def test_self_join_of_one_dataframe_roundtrips(spark, fx):
+    """df.join(df): the analyzer gives the right leaf fresh exprIds, so one
+    file relation is found under two keys; both sides' columns are kept."""
+    pruned = _roundtrip(
+        spark, fx,
+        lambda df: df.alias("l").join(df.alias("r"), F.col("l.someLong") == F.col("r.someLong"))
+                     .select(F.col("l.struct.col1"), F.col("r.nestedStruct.str")),
+    )
+    assert pruned.fieldNames() == ["someLong", "struct", "nestedStruct"]
+    assert pruned["struct"].dataType.fieldNames() == ["col1"]
+    assert pruned["nestedStruct"].dataType.fieldNames() == ["str"]
+
+
+def test_union_of_one_dataframe_roundtrips(spark, fx):
+    """df.union(df): both branches read the one relation."""
+    pruned = _roundtrip(spark, fx, lambda df: df.union(df).select("someStr", "struct.col2"))
+    assert pruned == st(f("someStr", STR), struct_field(f("col2", LONG)))
+
+
+def test_cte_referenced_only_from_a_subquery_roundtrips(spark, fx):
+    """WITH c AS (...) ... WHERE x IN (SELECT ... FROM c): the CTE's only
+    reference sits inside a subquery plan, so the def's relation is owned
+    through _finalize's ref -> def step taken from inside that plan."""
+    path = fx["sample_parquet"]
+    sql = (
+        "WITH c AS (SELECT someLong AS k FROM cte_sq WHERE struct.col1 = 1 AND someStr = 'bla') "
+        "SELECT someStr, nestedStruct.str FROM cte_sq WHERE someLong IN (SELECT k FROM c)"
+    )
+    spark.read.parquet(path).createOrReplaceTempView("cte_sq")
+    full = spark.sql(sql)
+    assert "CTERelationRef" in full._jdf.queryExecution().analyzed().toString()
+    expected = sorted(map(str, full.collect()))
+    assert len(expected) == 1
+    pruned = gen(full).for_paths(path)
+    spark.read.schema(pruned).parquet(path).createOrReplaceTempView("cte_sq")
+    assert sorted(map(str, spark.sql(sql).collect())) == expected, pruned
+    assert pruned == st(
+        f("someStr", STR),
+        f("someLong", LONG),
+        struct_field(f("col1", LONG)),
+        f("nestedStruct", T.StructType([f("str", STR)])),
+    )
 
 
 def test_plan_export_jar_matches_its_source():

@@ -12,6 +12,11 @@ the upstream-crash policy included) — only max_examples and the fixtures'
 location differ, so a bug found here is a bug the suite's fuzz would
 eventually find, and any engine INTERNAL_ERROR lands in the same committed
 corpus (tests/upstream_bugs/corpus.jsonl).
+
+The hunt runs with SCORE_SPARK_SOR_RAISE unset, as production does, and
+prints per invariant how many analyses ran and how many fell back to full
+schemas. Every analysis in those tests asserts it did not fall back, so a
+fallback also falsifies its example.
 """
 
 from __future__ import annotations
@@ -36,7 +41,9 @@ def main() -> int:
     n_stream = int(sys.argv[5]) if len(sys.argv) > 5 else 60
     n_grammar = int(sys.argv[6]) if len(sys.argv) > 6 else 120
 
+    os.environ.pop("SCORE_SPARK_SOR_RAISE", None)
     import tests.test_properties as tp
+    from score_spark.schema_on_read.generator import SchemaOnRead
     from tests.fixtures_nested import (
         CRAZY_MAP_SCHEMA,
         SAMPLE_SCHEMA,
@@ -64,6 +71,17 @@ def main() -> int:
     fuzz_paths["empty"] = f"{base}/empty_dir"
     os.makedirs(fuzz_paths["empty"], exist_ok=True)
     crazy_paths = write_pair(crazy_fuzz_rows(), CRAZY_MAP_SCHEMA, "crazy")
+
+    generate = SchemaOnRead.generate.__func__
+    counts = {"ran": 0, "fell_back": 0}
+
+    def counted(cls, df):
+        sor = generate(cls, df)
+        counts["ran"] += 1
+        counts["fell_back"] += sor.error is not None
+        return sor
+
+    SchemaOnRead.generate = classmethod(counted)
 
     def hunt(name, inner, kw, n):
         cfg = settings(max_examples=n, deadline=None,
@@ -96,11 +114,13 @@ def main() -> int:
         if n <= 0:  # 0 = skip the invariant (hunt a single one cheaply)
             print(f"[hunt] {name}: skipped", flush=True)
             continue
+        counts.update(ran=0, fell_back=0)
         try:
             hunt(name, test_fn.hypothesis.inner_test, kw, n)
         except Exception as ex:  # hypothesis re-raises the falsifying failure
             failures += 1
             print(f"[hunt] {name}: FALSIFIED\n{ex}", flush=True)
+        print(f"[hunt] {name}: {counts['ran']} analyses, {counts['fell_back']} fell back", flush=True)
     shutil.rmtree(base, ignore_errors=True)
     return 1 if failures else 0
 
