@@ -9,16 +9,27 @@ Rebuild of the reference pipeline (SchemaOnReadGenerator.java:42-63):
   4. best-effort: any failure → full schema (README.md:9).
 
 The analysis reads the JVM once: the vendored ``score.sor.PlanExport.export``
-(vendor/plan-export-src, built by vendor/build_plan_export_jar.sh) returns the
-plan JSON plus every file relation's files, root paths and schema in one
-py4j reply, the way the reference reads them in-process as a JVM library.
-The plan JSON is byte-identical to Catalyst's ``toJSON()``, written by the
-exporter's own serializer (``score.sor.PlanJson``) without Catalyst's
-per-node reflection.
-Beyond the three-call memo lookup it is the analyzer's only JVM call. The
-reply keys every file relation, in the main plan or in a subquery plan, by
-the exprIds of its output, which the plan JSON carries too; the walk, in
-Python, finds each ``LogicalRelation`` leaf's relation by that one key.
+(vendor/plan-export-src, built by vendor/build_plan_export_jar.sh) resolves
+the DataFrame's analyzed plan and returns its JSON plus every file
+relation's files, root paths and schema in one py4j reply, the way the
+reference reads them in-process as a JVM library. The plan JSON is the
+*walker view* of Catalyst's ``toJSON()`` (``score.sor.PlanJson``): the fields
+no handler here reads (``dataType``, ``nullable``, ``metadata``,
+``qualifier``, ``nonInheritableMetadataKeys``) are left out at every depth,
+an exprId is ``{id}`` (plus ``jvmId`` only for another JVM's id) and an
+expression's class is its simple name. On the analyzer's 417-plan corpus
+the reply is 37% of the bytes it takes with the full ``toJSON()``. It is
+the analyzer's only JVM call, made on a worker thread: the calling thread
+makes none. The reply keys every
+file relation, in the main plan or in a subquery plan, by the exprIds of its
+output, which the plan JSON carries too; the walk, in Python, finds each
+``LogicalRelation`` leaf's relation by that one key.
+
+Analyses are memoized by the reply text (everything before its timing
+field): it is the walk's exact input, so equal replies give equal analyses
+by construction, and the memo holds no JVM object. A DataFrame analyzed
+before returns its memo entry without a JVM call, for as long as the memo
+keeps that entry.
 
 Architectural deviation from the reference (deliberate, SURVEY.md §7):
 attributes are tracked by Catalyst **exprId** straight from the analyzed-plan
@@ -47,6 +58,7 @@ import logging
 import os
 import threading
 import time
+import weakref
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
@@ -55,7 +67,7 @@ from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, types as T
 
-from score_spark.schema_on_read.plan_json import Node, build_tree, cls_name, expr_id, expr_trees
+from score_spark.schema_on_read.plan_json import Node, build_tree, cls_name, expr_id, expr_trees, exprid_key
 from score_spark.schema_on_read.trie import (
     FanNode,
     Handle,
@@ -224,9 +236,19 @@ def _norm_path(p: str) -> str:
     return p
 
 
-# semanticHash -> (jvm analyzed plan, generated SchemaOnRead); hits verified
-# with sameResult() so hash collisions can't cross-wire two queries
-_GENERATE_CACHE: dict[int, tuple[Any, "SchemaOnRead"]] = {}
+# export reply text up to its timing field -> the analysis of that reply,
+# oldest first, at most _MEMO_SIZE entries. The key is the walk's whole
+# input, so a hit is the analysis a cold walk would produce.
+_GENERATE_CACHE: dict[str, "SchemaOnRead"] = {}
+_MEMO_SIZE = 64
+# each DataFrame analyzed before -> its memo key. Every lookup goes through
+# the memo, so this index never answers with an analysis the memo has
+# evicted. It does not keep a DataFrame alive; a live DataFrame keeps its
+# key text.
+_BY_FRAME: "weakref.WeakKeyDictionary[DataFrame, str]" = weakref.WeakKeyDictionary()
+# generate() may run on several threads at once: every memo and index write
+# happens under this lock
+_MEMO_LOCK = threading.Lock()
 
 _log = logging.getLogger(__name__)
 
@@ -314,11 +336,11 @@ def _init_worker() -> None:
         )
 
 
-def _export_plan(jplan) -> str:
-    """Runs on the worker: the one py4j round trip of a cold analysis."""
+def _export_plan(jdf) -> str:
+    """Runs on the worker: the one py4j round trip of an analysis."""
     if _WORKER.export is None:
         raise RuntimeError(_WORKER.error)
-    return _WORKER.export(jplan)
+    return _WORKER.export(jdf)
 
 
 def _plan_json_pool() -> ThreadPoolExecutor:
@@ -367,36 +389,23 @@ class SchemaOnRead:
     @classmethod
     def generate(cls, df: DataFrame) -> "SchemaOnRead":
         t0 = time.monotonic()
-        jplan = None
-        h = None
-        try:
-            jplan = df._jdf.queryExecution().analyzed()
-            # memoized per structurally-equal plan: repeat analysis of the
-            # same query (the production pattern — derive the read schema
-            # once, reuse across runs) skips the PlanExport.export round
-            # trip (the analyzer's only JVM call besides these three memo
-            # lookups), the reply parse and the walk (a cold suite plan is
-            # ~5 ms p50; a hit is under 1 ms).
-            # Exact case-class equality, NOT sameResult(): canonicalization
-            # strips SubqueryAlias nodes, which for_view() depends on.
-            h = jplan.hashCode()
-            hit = _GENERATE_CACHE.get(h)
-            if hit is not None and hit[0].equals(jplan):
-                cached = hit[1]
-                cached.duration = time.monotonic() - t0
-                return cached
-        except Exception:
-            pass  # py4j hiccup: fall through to a full uncached generate
+        # a DataFrame's analyzed plan is fixed when it is built, so one
+        # analyzed before is answered by its memo entry while the memo still
+        # holds that entry: no JVM call (a few µs)
+        cached = _GENERATE_CACHE.get(_BY_FRAME.get(df))
+        if cached is not None:
+            cached.duration = time.monotonic() - t0
+            return cached
 
         self = cls()
         try:
-            # the analysis's one py4j round trip: PlanExport.export returns
-            # the plan JSON plus every file relation's files, roots and
-            # schema. It runs on the worker: its socket has TCP_NODELAY on
-            # (_jvm_nodelay), without which an export reply over 8 KB (most
-            # suite plans) could stall ~43 ms on a delayed ACK, and only its
-            # JVM thread sees a jar attached at runtime
-            # (_plan_export_member). The worker is a LONG-LIVED
+            # the analysis's one py4j round trip: PlanExport.export resolves
+            # the analyzed plan and returns its JSON plus every file
+            # relation's files, roots and schema. It runs on the worker: its
+            # socket has TCP_NODELAY on (_jvm_nodelay), without which an
+            # export reply over 8 KB (most suite plans) could stall ~43 ms on
+            # a delayed ACK, and only its JVM thread sees a jar attached at
+            # runtime (_plan_export_member). The worker is a LONG-LIVED
             # single-thread executor, not a thread per call:
             # pinned mode opens a fresh py4j connection + JVM thread for
             # every new Python thread (measured +12 ms per call), and the
@@ -404,8 +413,16 @@ class SchemaOnRead:
             # is re-raised by .result() and lands in the best-effort
             # fallback.
             t = time.monotonic()
-            reply = _plan_json_pool().submit(_export_plan, jplan).result()
+            reply = _plan_json_pool().submit(_export_plan, df._jdf).result()
             t_export = time.monotonic()
+            # an equal reply (e.g. the same query built again over the same
+            # reads) is the same walk input: reuse its analysis before
+            # parsing anything
+            key = reply[: reply.rindex(',"serialize_ms":')]
+            cached = _memo_hit(df, key)
+            if cached is not None:
+                cached.duration = time.monotonic() - t0
+                return cached
             payload = json.loads(reply)
             self._rels = {**_collect_jvm_relations(payload), **_collect_jvm_subquery_relations(payload)}
             root = build_tree(payload["plan"])
@@ -417,10 +434,6 @@ class SchemaOnRead:
                 "walk_ms": (time.monotonic() - t_parse) * 1e3,
                 "serialize_ms": payload["serialize_ms"],
             }
-            if h is not None:
-                if len(_GENERATE_CACHE) >= 64:
-                    _GENERATE_CACHE.pop(next(iter(_GENERATE_CACHE)))
-                _GENERATE_CACHE[h] = (jplan, self)
         except Exception as e:
             # best-effort: fall back to full schemas (README.md:9), keeping
             # the reason. Tests set SCORE_SPARK_SOR_RAISE=1 so walker bugs
@@ -435,6 +448,10 @@ class SchemaOnRead:
         for info in self._rels.values():
             if info is not None:
                 self._relation(info)
+        if not self._failed:
+            # another thread may have memoized an equal reply meanwhile:
+            # answer with the analysis the memo keeps
+            self = _memoize(df, key, self)
         self.duration = time.monotonic() - t0
         return self
 
@@ -1368,6 +1385,30 @@ def _node_output(node: Node) -> list[tuple[str, int]]:
     return []
 
 
+def _memo_hit(df: DataFrame, key: str) -> SchemaOnRead | None:
+    """The memoized analysis of reply ``key``, indexed for ``df``; None on a
+    miss."""
+    with _MEMO_LOCK:
+        hit = _GENERATE_CACHE.get(key)
+        if hit is not None:
+            _BY_FRAME[df] = key
+        return hit
+
+
+def _memoize(df: DataFrame, key: str, sor: SchemaOnRead) -> SchemaOnRead:
+    """The memo's analysis of reply ``key``, indexed for ``df``: the one
+    already kept, else ``sor``, inserted after evicting the oldest entry
+    beyond _MEMO_SIZE."""
+    with _MEMO_LOCK:
+        kept = _GENERATE_CACHE.get(key)
+        if kept is None:
+            if len(_GENERATE_CACHE) >= _MEMO_SIZE:
+                del _GENERATE_CACHE[next(iter(_GENERATE_CACHE))]
+            kept = _GENERATE_CACHE[key] = sor
+        _BY_FRAME[df] = key
+        return kept
+
+
 def _collect_jvm_relations(payload: dict[str, Any]) -> dict[Any, dict[str, Any] | None]:
     """The main plan's file relations from an export reply."""
     return _keyed_relations(payload["relations"])
@@ -1382,7 +1423,7 @@ def _collect_jvm_subquery_relations(payload: dict[str, Any]) -> dict[Any, dict[s
 
 def _keyed_relations(entries: list[dict[str, Any]]) -> dict[Any, dict[str, Any] | None]:
     """Export-reply relation entries as {key: info}. The key is the
-    frozenset of the leaf's output (jvmId, id) exprIds: unique per relation
+    frozenset of the leaf's output exprIds as expr_id reads them: unique per relation
     instance, and the plan JSON carries the same ids, so _on_LogicalRelation
     finds any leaf's entry by it. A zero-column relation's key is empty and
     pairs with no leaf; it is kept under its entry's id() so that two of
@@ -1390,7 +1431,7 @@ def _keyed_relations(entries: list[dict[str, Any]]) -> dict[Any, dict[str, Any] 
     this is where each leaf's paths and full schema come from; None for a
     non-file relation. Identity = sorted qualified input files
     (SchemaOnReadState.java:80-95,122-126)."""
-    return {frozenset(map(tuple, e["key"])) or id(e): _relation_info(e["rel"]) for e in entries}
+    return {frozenset(map(exprid_key, e["key"])) or id(e): _relation_info(e["rel"]) for e in entries}
 
 
 def _relation_info(rel: dict[str, Any] | None) -> dict[str, Any] | None:

@@ -1,5 +1,7 @@
 """Reconstruct Catalyst's ``TreeNode.toJSON`` flat pre-order encoding into
-nested python trees — for both logical-plan nodes and expression trees.
+nested python trees — for both logical-plan nodes and expression trees. The
+exporter sends the walker view of that encoding (vendor/plan-export-src,
+``PlanJson``), which keeps its shape.
 
 Catalyst serializes a tree as a flat JSON array in pre-order where each node
 carries ``num-children``; expression-valued fields hold either one flattened
@@ -73,6 +75,10 @@ def expr_trees(value: Any) -> list[Node]:
 
 def expr_id(node: Node) -> tuple[str, int] | None:
     e = node.get("exprId")
-    if not isinstance(e, dict):
-        return None
+    return exprid_key(e) if isinstance(e, dict) else None
+
+
+def exprid_key(e: dict[str, Any]) -> tuple[str, int]:
+    """An exprId as the exporter writes it, ``{id[, jvmId]}``, as a
+    ``(jvmId, id)`` key; the jvmId is "" for this JVM's ids."""
     return (e.get("jvmId", ""), e["id"])

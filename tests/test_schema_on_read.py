@@ -1824,9 +1824,9 @@ def test_failed_export_names_its_error(spark, fx, monkeypatch, caplog):
 
 def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     """A cold analysis reads the JVM through one PlanExport.export call on
-    the worker; the caller makes only the memo lookup's three calls
-    (queryExecution, analyzed, hashCode). Before the exporter, this plan
-    cost more than 60 py4j calls on the caller (~18 per file relation)."""
+    the worker, which resolves the analyzed plan itself; the calling thread
+    makes no py4j call. Before the exporter, this plan cost more than 60
+    py4j calls on the caller (~18 per file relation)."""
     import threading
     from collections import Counter
 
@@ -1858,7 +1858,7 @@ def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     monkeypatch.undo()
     worker = sum(n for name, n in calls.items() if name.startswith("sor-plan-json"))
     assert worker == 1, calls
-    assert calls[threading.current_thread().name] <= 3, calls
+    assert calls[threading.current_thread().name] == 0, calls
     assert sor.error is None
     assert len(sor.relations) == 3 and len(sor._rels) == 5
     assert sor.for_paths(fx["sample_parquet"])["struct"].dataType.fieldNames() == ["col1", "col3"]
@@ -1867,6 +1867,340 @@ def test_cold_generate_makes_one_export_round_trip(spark, fx, monkeypatch):
     # serialize_ms is the JVM's share of export_ms; the other three are disjoint
     assert sor.timings["serialize_ms"] <= sor.timings["export_ms"]
     assert sor.timings["export_ms"] + sor.timings["parse_ms"] + sor.timings["walk_ms"] <= sor.duration * 1e3
+
+
+# ------------------------------------------------ the view-keyed plan memo
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """Counts py4j commands per Python thread (the worker's name starts
+    with sor-plan-json) while the test body runs."""
+    import threading
+    from collections import Counter
+
+    import py4j.clientserver as cs
+
+    calls: Counter = Counter()
+    send = cs.ClientServerConnection.send_command
+
+    def counted(conn, command):
+        calls[threading.current_thread().name] += 1
+        return send(conn, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    return calls
+
+
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    """An empty plan memo and identity index, restored afterwards."""
+    import weakref
+
+    from score_spark.schema_on_read import generator as G
+
+    G._plan_json_pool().submit(lambda: None).result()  # initializer done
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    monkeypatch.setattr(G, "_BY_FRAME", weakref.WeakKeyDictionary())
+    return G
+
+
+def test_reanalysis_of_one_dataframe_makes_no_py4j_call(spark, fx, fresh_memo, py4j_calls):
+    """A DataFrame analyzed before is answered from the memo with no py4j
+    call on any thread: its analyzed plan cannot change."""
+    df = spark.read.parquet(fx["sample_parquet"]).select("someStr", "nestedStruct.childStruct.col2")
+    py4j_calls.clear()
+    first = SchemaOnRead.generate(df)
+    assert first.error is None and sum(py4j_calls.values()) == 1, py4j_calls
+    py4j_calls.clear()
+    assert SchemaOnRead.generate(df) is first
+    assert sum(py4j_calls.values()) == 0, py4j_calls
+
+
+def test_equal_plans_share_one_analysis(spark, fx, fresh_memo, py4j_calls, monkeypatch):
+    """Two DataFrames built separately over the same read with equal plans
+    get equal export replies, so the second analysis is the first one's:
+    one export call, and neither relation collector nor the walk runs."""
+    G = fresh_memo
+    base = spark.read.parquet(fx["sample_parquet"])
+    first = SchemaOnRead.generate(base.select("someStr", "struct").filter("someLong > 0"))
+    assert first.error is None
+    ran: list[str] = []
+
+    def tracked(name, fn):
+        def run(*args):
+            ran.append(name)
+            return fn(*args)
+
+        return run
+
+    monkeypatch.setattr(G, "_collect_jvm_relations", tracked("relations", G._collect_jvm_relations))
+    monkeypatch.setattr(
+        G, "_collect_jvm_subquery_relations", tracked("subquery_relations", G._collect_jvm_subquery_relations)
+    )
+    monkeypatch.setattr(G.SchemaOnRead, "_analyze", tracked("walk", G.SchemaOnRead._analyze))
+    df = base.select("someStr", "struct").filter("someLong > 0")
+    py4j_calls.clear()
+    second = SchemaOnRead.generate(df)
+    assert second is first
+    assert ran == []
+    assert sum(py4j_calls.values()) == 1, py4j_calls
+    assert all(name.startswith("sor-plan-json") for name in py4j_calls), py4j_calls
+
+
+def test_identity_index_never_outlives_the_memo(spark, fx, fresh_memo, py4j_calls):
+    """Once 64 other analyses have pushed a DataFrame's entry out of the
+    memo, analyzing that DataFrame again exports again: the identity index
+    answers only with what the memo still holds."""
+    G = fresh_memo
+    base = spark.read.parquet(fx["sample_parquet"])
+    df = base.select("someStr")
+    first = SchemaOnRead.generate(df)
+    for i in range(G._MEMO_SIZE):
+        SchemaOnRead.generate(base.select((F.col("someLong") + i).alias(f"x{i}")))
+    assert len(G._GENERATE_CACHE) == G._MEMO_SIZE
+    assert first not in G._GENERATE_CACHE.values()
+    py4j_calls.clear()
+    again = SchemaOnRead.generate(df)
+    assert again is not first and again.error is None
+    assert sum(py4j_calls.values()) == 1, py4j_calls
+    assert again.for_paths(fx["sample_parquet"]) == first.for_paths(fx["sample_parquet"])
+
+
+def test_memo_holds_no_java_object(spark, fx, fresh_memo):
+    """The memo is keyed by reply text and holds Python analyses only: no
+    py4j proxy (and so no JVM plan) is reachable from it."""
+    import gc
+
+    from py4j.java_gateway import JavaClass, JavaMember, JavaObject, JavaPackage
+
+    G = fresh_memo
+    base = spark.read.parquet(fx["sample_parquet"])
+    spark.read.parquet(fx["partitioned"]).createOrReplaceTempView("memo_b")
+    base.createOrReplaceTempView("memo_a")
+    for df in (
+        base.select("struct.col1", F.explode("someStrArray")),
+        spark.sql("SELECT a.someStr FROM memo_a a WHERE a.someLong IN (SELECT struct.col2 FROM memo_b)"),
+    ):
+        assert SchemaOnRead.generate(df).error is None
+    assert len(G._GENERATE_CACHE) == 2
+    seen, todo, java = set(), [G._GENERATE_CACHE], []
+    while todo:
+        obj = todo.pop()
+        if id(obj) in seen or isinstance(obj, type):
+            continue
+        seen.add(id(obj))
+        if isinstance(obj, (JavaObject, JavaMember, JavaClass, JavaPackage)):
+            java.append(type(obj).__name__)
+            continue
+        todo.extend(gc.get_referents(obj))
+    assert java == []
+
+
+def test_memoize_keeps_the_first_analysis_of_a_reply(monkeypatch):
+    """Memoizing a reply key the memo already holds answers with the kept
+    analysis and evicts nothing: the memo stays full and its oldest entry
+    stays."""
+    import weakref
+
+    from score_spark.schema_on_read import generator as G
+
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    monkeypatch.setattr(G, "_BY_FRAME", weakref.WeakKeyDictionary())
+
+    class Frame:  # a weak-referenceable stand-in for a DataFrame
+        pass
+
+    kept = [G._memoize(Frame(), str(i), SchemaOnRead()) for i in range(G._MEMO_SIZE)]
+    frame = Frame()
+    assert G._memoize(frame, "5", SchemaOnRead()) is kept[5]
+    assert list(G._GENERATE_CACHE) == [str(i) for i in range(G._MEMO_SIZE)]
+    assert G._BY_FRAME[frame] == "5"
+    assert G._memo_hit(Frame(), "absent") is None
+
+
+def test_memo_bound_holds_under_threads(monkeypatch):
+    """Eight threads memoizing at once, with a short switch interval, leave
+    the memo at its bound."""
+    import sys
+    import threading
+    import weakref
+
+    from score_spark.schema_on_read import generator as G
+
+    monkeypatch.setattr(G, "_GENERATE_CACHE", {})
+    monkeypatch.setattr(G, "_BY_FRAME", weakref.WeakKeyDictionary())
+
+    class Frame:  # a weak-referenceable stand-in for a DataFrame
+        pass
+
+    frames = [Frame() for _ in range(8)]
+    errors: list[BaseException] = []
+
+    def work(t: int) -> None:
+        try:
+            for i in range(400):
+                G._memoize(frames[t], f"{t}/{i}", SchemaOnRead())
+        except BaseException as e:  # collected for the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(G._GENERATE_CACHE) == G._MEMO_SIZE
+    assert all(isinstance(sor, SchemaOnRead) for sor in G._GENERATE_CACHE.values())
+
+
+def _full_json_export(export, jvm_id: str):
+    """An export that sends Catalyst's full toJSON() as the reply's plan,
+    with each relation key in toJSON()'s own exprId form: the reply the
+    walker would get if the exporter dropped nothing."""
+    import json
+
+    def full(jdf):
+        payload = json.loads(export(jdf))
+        payload["plan"] = json.loads(jdf.queryExecution().analyzed().toJSON())
+        for entry in payload["relations"] + payload["subquery_relations"]:
+            for k in entry["key"]:
+                k.setdefault("jvmId", jvm_id)
+        return json.dumps(payload, separators=(",", ":"))
+
+    return full
+
+
+def _exporter_plans(spark, fx) -> dict:
+    """Every plan shape the exporter tests cover: subqueries, CTE, lambdas,
+    rollup/cube, posexplode, window, odd literals and names, sample, a
+    400-deep Project chain, and SQL literals through a temp view."""
+    from pyspark.sql import Window
+
+    path = fx["sample_parquet"]
+    spark.read.parquet(path).createOrReplaceTempView("pj_a")
+    spark.read.parquet(fx["partitioned"]).createOrReplaceTempView("pj_b")
+    base = spark.read.parquet(path)
+    deep = base
+    for i in range(400):
+        deep = deep.withColumn(f"c{i}", F.col("someLong") + i)
+    odd_name = 'we"ird\\name\n\t\x01é✓'
+    plans = {
+        "subqueries": spark.sql(
+            "SELECT a.someStr, (SELECT max(someLong) FROM pj_b) AS mx FROM pj_a a "
+            "WHERE a.someLong IN (SELECT struct.col2 FROM pj_b) "
+            "AND EXISTS (SELECT 1 FROM pj_b b WHERE b.someStr = a.someStr)"
+        ),
+        "cte": spark.sql(
+            "WITH c AS (SELECT someStr, struct.col1 AS v FROM pj_a WHERE someLong > 0) "
+            "SELECT x.someStr, sum(y.v) FROM c x JOIN c y ON x.someStr = y.someStr GROUP BY x.someStr"
+        ),
+        "lambdas": base.select(
+            F.transform("someComplexArray", lambda e: e["col1"] + 1).alias("t"),
+            F.filter("struct.subArray", lambda x: x > 1).alias("f"),
+            F.aggregate("struct.subArray", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("agg"),
+            F.exists("someArrayOfArrays", lambda a: F.size(a) > 2).alias("e"),
+        ),
+        "rollup": base.rollup("someStr", "struct.col1").agg(F.sum("someLong")),
+        "cube": base.cube("someStr", "someBoolean").count(),
+        "generate": base.select("someStr", F.posexplode("someComplexArray")).select("someStr", "pos", "col.col2"),
+        "window": base.select(
+            "someStr",
+            F.row_number().over(Window.partitionBy("someStr").orderBy(F.col("struct.col2").desc())).alias("rk"),
+        ),
+        "literals": base.select(
+            F.lit(12.345).cast("decimal(10,3)").alias("dec"),
+            F.lit("2024-02-29").cast("date").alias("d"),
+            F.lit("2024-02-29 12:34:56").cast("timestamp").alias("ts"),
+            F.array(F.lit(1), F.lit(2)).alias("arr"),
+            F.create_map(F.lit("k"), F.lit(1.5)).alias("m"),
+            F.lit(None).cast("string").alias("nul"),
+            F.lit('quote " backslash \\ newline \n tab \t ctl \x01').alias("s"),
+            F.col("someStr").alias(odd_name),
+        ).filter(F.col(odd_name).isNotNull()),
+        "sample": base.sample(withReplacement=False, fraction=0.37, seed=3).select("someStr"),
+        "deep_400": deep.select("someLong"),
+    }
+    spark.sql(
+        "SELECT array(1, 2) a, map('k', 2.5D) m, DATE'2024-01-01' d, TIMESTAMP'2024-01-01 00:00:00' t, "
+        "CAST(1.5 AS DECIMAL(20, 4)) x, X'0A0B' b, NULL n"
+    ).createOrReplaceTempView("pj_lit")
+    plans["sql_literals"] = spark.sql("SELECT * FROM pj_lit")
+    return plans
+
+
+def test_walker_reads_nothing_the_view_drops(spark, fx, fresh_memo, monkeypatch):
+    """Differential: on every exporter test plan, plus a nested-Parquet
+    plan, an analysis of the view reply and one of a reply carrying
+    Catalyst's full toJSON() give the same for_paths for every source."""
+    from tools.plan_corpus import view_rule
+
+    G = fresh_memo
+    plans = _exporter_plans(spark, fx)
+    plans["nested_parquet"] = spark.read.parquet(fx["sample_parquet"]).select(
+        "nestedStruct.childStruct.col2",
+        F.explode("someComplexArray.col1").alias("c1"),
+        F.col("struct.subArray")[0].alias("a0"),
+    )
+    view_export, full_export = G._export_plan, _full_json_export(G._export_plan, view_rule(spark).jvm_id)
+    for name, df in plans.items():
+        monkeypatch.setattr(G, "_export_plan", view_export)
+        G._GENERATE_CACHE.clear()
+        view = SchemaOnRead.generate(df)
+        monkeypatch.setattr(G, "_export_plan", full_export)
+        G._GENERATE_CACHE.clear()
+        full = SchemaOnRead.generate(df)
+        assert view.error is None and full.error is None, (name, view.error, full.error)
+        assert view is not full and len(view.relations) == len(full.relations), name
+        for rel in view.relations:
+            assert view.for_paths(*rel.root_paths) == full.for_paths(*rel.root_paths), (name, rel.root_paths)
+
+
+def _read_field_names(tree) -> set[str]:
+    """String constants a module subscripts with, passes to ``.get(...)``,
+    or tests with ``in``: the JSON fields its code reads."""
+    import ast
+
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Subscript) and isinstance(node.slice, ast.Constant):
+            names.add(node.slice.value)
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "get":
+            if node.args and isinstance(node.args[0], ast.Constant):
+                names.add(node.args[0].value)
+        elif isinstance(node, ast.Compare) and isinstance(node.left, ast.Constant):
+            if any(isinstance(op, (ast.In, ast.NotIn)) for op in node.ops):
+                names.add(node.left.value)
+    return {n for n in names if isinstance(n, str)}
+
+
+def test_walker_reads_no_field_the_view_drops():
+    """No module of the analyzer reads a field the exporter leaves out. The
+    dropped set is read from the exporter's source and must equal the one
+    tools/plan_corpus.py projects toJSON() by."""
+    import ast
+    import glob
+    import re
+
+    from score_spark.schema_on_read import generator as G
+    from tools.plan_corpus import VIEW_DROPPED
+
+    src = os.path.join(os.path.dirname(G._PLAN_EXPORT_JAR), "plan-export-src", "score", "sor", "PlanJson.java")
+    with open(src) as fh:
+        m = re.search(r"Set<String> DROPPED = Set\.of\(([^)]*)\)", fh.read())
+    dropped = set(re.findall(r'"([^"]+)"', m.group(1)))
+    assert dropped == VIEW_DROPPED
+    pkg = os.path.dirname(G.__file__)
+    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+        with open(path) as fh:
+            read = _read_field_names(ast.parse(fh.read(), path))
+        assert not read & dropped, (os.path.basename(path), sorted(read & dropped))
 
 
 # ------------------------------------------- relation pairing by exprId key
@@ -1970,66 +2304,24 @@ def test_plan_export_jar_matches_its_source():
 
 def test_exporter_plan_json_is_catalysts_to_json(spark, fx):
     """The exporter writes the plan JSON itself (score.sor.PlanJson); on
-    every plan shape here its reply carries plan.toJSON()'s exact string,
-    with no subtree or value handed back to Catalyst."""
-    from pyspark.sql import Window
+    every plan shape here its reply's plan is the walker view of
+    plan.toJSON(), node for node, as tools/plan_corpus.py projects it, with
+    no subtree or value handed back to Catalyst. The writer the exporter
+    uses for whatever it does hand back (PlanExport.view) gives the same
+    view of the same toJSON()."""
+    import json
 
-    from tools.plan_corpus import check_json
+    from score_spark.schema_on_read import generator as G
+    from tools.plan_corpus import check_json, view_rule
 
-    path = fx["sample_parquet"]
-    spark.read.parquet(path).createOrReplaceTempView("pj_a")
-    spark.read.parquet(fx["partitioned"]).createOrReplaceTempView("pj_b")
-    base = spark.read.parquet(path)
-    deep = base
-    for i in range(400):
-        deep = deep.withColumn(f"c{i}", F.col("someLong") + i)
-    odd_name = 'we"ird\\name\n\t\x01é✓'
-    plans = {
-        "subqueries": spark.sql(
-            "SELECT a.someStr, (SELECT max(someLong) FROM pj_b) AS mx FROM pj_a a "
-            "WHERE a.someLong IN (SELECT struct.col2 FROM pj_b) "
-            "AND EXISTS (SELECT 1 FROM pj_b b WHERE b.someStr = a.someStr)"
-        ),
-        "cte": spark.sql(
-            "WITH c AS (SELECT someStr, struct.col1 AS v FROM pj_a WHERE someLong > 0) "
-            "SELECT x.someStr, sum(y.v) FROM c x JOIN c y ON x.someStr = y.someStr GROUP BY x.someStr"
-        ),
-        "lambdas": base.select(
-            F.transform("someComplexArray", lambda e: e["col1"] + 1).alias("t"),
-            F.filter("struct.subArray", lambda x: x > 1).alias("f"),
-            F.aggregate("struct.subArray", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("agg"),
-            F.exists("someArrayOfArrays", lambda a: F.size(a) > 2).alias("e"),
-        ),
-        "rollup": base.rollup("someStr", "struct.col1").agg(F.sum("someLong")),
-        "cube": base.cube("someStr", "someBoolean").count(),
-        "generate": base.select("someStr", F.posexplode("someComplexArray")).select("someStr", "pos", "col.col2"),
-        "window": base.select(
-            "someStr",
-            F.row_number().over(Window.partitionBy("someStr").orderBy(F.col("struct.col2").desc())).alias("rk"),
-        ),
-        "literals": base.select(
-            F.lit(12.345).cast("decimal(10,3)").alias("dec"),
-            F.lit("2024-02-29").cast("date").alias("d"),
-            F.lit("2024-02-29 12:34:56").cast("timestamp").alias("ts"),
-            F.array(F.lit(1), F.lit(2)).alias("arr"),
-            F.create_map(F.lit("k"), F.lit(1.5)).alias("m"),
-            F.lit(None).cast("string").alias("nul"),
-            F.lit('quote " backslash \\ newline \n tab \t ctl \x01').alias("s"),
-            F.col("someStr").alias(odd_name),
-        ).filter(F.col(odd_name).isNotNull()),
-        "sample": base.sample(withReplacement=False, fraction=0.37, seed=3).select("someStr"),
-        "deep_400": deep.select("someLong"),
-    }
-    spark.sql(
-        "SELECT array(1, 2) a, map('k', 2.5D) m, DATE'2024-01-01' d, TIMESTAMP'2024-01-01 00:00:00' t, "
-        "CAST(1.5 AS DECIMAL(20, 4)) x, X'0A0B' b, NULL n"
-    ).createOrReplaceTempView("pj_lit")
-    plans["sql_literals"] = spark.sql("SELECT * FROM pj_lit")
-    for name, df in plans.items():
-        same, fallbacks, where = check_json(df)
-        assert same, f"{name}: {where}"
-        assert fallbacks == 0, name
-
+    rule = view_rule(spark)
+    for name, df in _exporter_plans(spark, fx).items():
+        checked = check_json(df)
+        assert checked["same"], f"{name}: {checked['where']}"
+        assert checked["fallbacks"] == 0, name
+        full = df._jdf.queryExecution().analyzed().toJSON()
+        via_fallback = G._plan_json_pool().submit(lambda: spark._jvm.score.sor.PlanExport.view(full)).result()
+        assert json.loads(via_fallback) == rule.view(json.loads(full)), name
 
 
 def test_plain_session_attaches_the_exporter(tmp_path):

@@ -11,7 +11,9 @@ metrics). A JSON copy of the fixture measures the wall-clock effect instead
 (JSON always reads all bytes; the pruned schema skips parse work).
 
 Every pruned re-read is verified to return the same rows as the full-schema
-run before its numbers are reported.
+run before its numbers are reported. The report counts the analyses it ran
+and how many of them fell back to full schemas (the target is 0); main()
+also prints that count on stderr.
 
 Usage: python tools/bytes_bench.py   # prints one JSON dict
 Wired into bench.py (the driver's per-round entry point) as the
@@ -53,6 +55,16 @@ N_JSON_ROWS = 480_000
 # rows doubles the decode delta the constants have to hide.
 N_AVRO_ROWS = 2_880_000
 FIXTURE_VERSION = 4  # bump when build_fixture_df or the format set changes
+
+# analyses run by run() and how many fell back to full schemas
+ANALYSES = {"ran": 0, "fell_back": 0}
+
+
+def _generate(df: DataFrame) -> SchemaOnRead:
+    sor = SchemaOnRead.generate(df)
+    ANALYSES["ran"] += 1
+    ANALYSES["fell_back"] += sor.error is not None
+    return sor
 
 
 def build_fixture_df(spark: SparkSession, n_rows: int) -> DataFrame:
@@ -165,7 +177,7 @@ def run_parquet_audit(spark: SparkSession, pq_path: str) -> dict:
     full_schema = full_df.schema
     for name, build in QUERY_SHAPES.items():
         q = build(full_df)
-        sor = SchemaOnRead.generate(q)
+        sor = _generate(q)
         pruned_schema = sor.for_paths(pq_path)
         # equivalence: the pruned re-read answers the query identically
         pruned_q = build(spark.read.schema(pruned_schema).parquet(pq_path))
@@ -174,9 +186,10 @@ def run_parquet_audit(spark: SparkSession, pq_path: str) -> dict:
         rep = pruning_ratio(pq_path, full_schema, pruned_schema)
         rep["analyzer_sec"] = round(sor.duration, 4)
         # warm = repeat analysis of the same query (the production pattern:
-        # derive once, reuse) — served from the structural-plan memo
+        # derive once, reuse) — the same DataFrame, served from the plan
+        # memo with no JVM call
         t0 = time.monotonic()
-        SchemaOnRead.generate(q)
+        _generate(q)
         rep["analyzer_warm_sec"] = round(time.monotonic() - t0, 4)
         out[name] = rep
     return out
@@ -202,7 +215,7 @@ def run_json_wall(spark: SparkSession, js_path: str, full_schema) -> dict:
         return spark.read.schema(schema).json(js_path).coalesce(8)
 
     full_df = spark.read.schema(full_schema).json(js_path)
-    sor = SchemaOnRead.generate(build(full_df))
+    sor = _generate(build(full_df))
     pruned_schema = sor.for_paths(js_path)
     # warmup then measure, median-of-3 each
     full_times, pruned_times = [], []
@@ -246,7 +259,7 @@ def run_avro_wall(spark: SparkSession, av_path: str, full_schema) -> dict:
         return spark.read.schema(schema).format("avro_minimal").load(av_path).coalesce(8)
 
     full_df = spark.read.schema(full_schema).format("avro_minimal").load(av_path)
-    sor = SchemaOnRead.generate(build(full_df))
+    sor = _generate(build(full_df))
     pruned_schema = sor.for_paths(av_path)
     full_times, pruned_times = [], []
     for _ in range(3):
@@ -265,6 +278,7 @@ def run_avro_wall(spark: SparkSession, av_path: str, full_schema) -> dict:
 
 
 def run(spark: SparkSession) -> dict:
+    ANALYSES.update(ran=0, fell_back=0)
     pq_path, js_path, av_path = ensure_fixture(spark)
     parquet = run_parquet_audit(spark, pq_path)
     js = run_json_wall(spark, js_path, spark.read.parquet(pq_path).schema)
@@ -292,6 +306,8 @@ def run(spark: SparkSession) -> dict:
         "gate_avro_speedup_ge_120": ((av or {}).get("speedup") or 0) >= 1.2,
         "max_analyzer_warm_sec": max(warm),
         "gate_analyzer_warm_le_50ms": max(warm) <= 0.05,
+        "analyses": ANALYSES["ran"],
+        "analyses_fell_back": ANALYSES["fell_back"],
     }
 
 
@@ -299,7 +315,9 @@ def main() -> None:
     from score_spark.session import get_session
 
     spark = get_session(app_name="score-spark-bytes", master="local[8]", shuffle_partitions=8)
-    print(json.dumps(run(spark), indent=2))
+    report = run(spark)
+    print(json.dumps(report, indent=2))
+    print(f"[bytes] {report['analyses']} analyses, {report['analyses_fell_back']} fell back", file=sys.stderr)
     spark.stop()
 
 

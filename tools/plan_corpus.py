@@ -9,9 +9,11 @@ copies of its wide-nested fixture, at leaf depth 1-3 and projection chain
 ``<family>/v<variant>/<format>/d<depth>/c<chain>``.
 
   --check-json  the plan JSON in the exporter's reply
-                (score.sor.PlanExport.export) is plan.toJSON(), string for
-                string, and no subtree or value of it fell back to Catalyst's
-                serializer; exit status 1 on any plan that fails
+                (score.sor.PlanExport.export) is the walker view of
+                plan.toJSON(), node for node, as view() below projects it
+                (independently of the exporter's Java code), and no subtree
+                or value of it fell back to Catalyst's serializer; prints the total reply bytes next to the total
+                toJSON() bytes; exit status 1 on any plan that fails
   --digest      one line per plan: the name and a SHA-256 of its for_paths
                 output from a cold SchemaOnRead.generate (every source's
                 schema, plus the error if the analysis failed), to diff two
@@ -43,6 +45,12 @@ sys.path.insert(0, ROOT)
 
 CORPUS_SIZE = 417
 FIXTURE_SEED = 0
+
+# the view rule (score.sor.PlanJson's javadoc): these fields are left out at
+# every depth, an ExprId is {id[, jvmId]} with this JVM's id left out, and an
+# Expression node's class is its name after the last dot
+VIEW_DROPPED = frozenset({"dataType", "nullable", "metadata", "qualifier", "nonInheritableMetadataKeys"})
+_EXPR_ID = "org.apache.spark.sql.catalyst.expressions.ExprId"
 
 
 def _perfbench():
@@ -108,21 +116,82 @@ def plans(spark, sf: str, fixture_dir: str, match: str | None = None) -> Iterato
         yield name, plan["df"], plan["sources"]
 
 
-def check_json(df) -> tuple[bool, int, str]:
-    """(the exporter's plan JSON is ``toJSON()``'s string, the fallbacks its
-    reply reports, where the two first differ or ""), both taken on the
-    analyzer's export worker."""
+class _ViewRule:
+    """view(): the walker view of a parsed ``toJSON()``, by the rule above.
+    Whether a class is an Expression is asked of the JVM, once per name."""
+
+    def __init__(self, spark) -> None:
+        jvm = spark._jvm
+        self._jvm = jvm
+        self._expression = jvm.java.lang.Class.forName("org.apache.spark.sql.catalyst.expressions.Expression")
+        self._loader = jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+        # this JVM's id, as any attribute it creates carries it
+        self.jvm_id = spark.range(1)._jdf.queryExecution().analyzed().output().head().exprId().jvmId().toString()
+        self._names: dict[str, str] = {}
+
+    def _class(self, name: str) -> str:
+        if name not in self._names:
+            try:
+                is_expr = self._expression.isAssignableFrom(self._jvm.java.lang.Class.forName(name, False, self._loader))
+            except Exception:  # not loadable here: keep the full name, as the exporter does
+                is_expr = False
+            self._names[name] = name.rsplit(".", 1)[-1] if is_expr else name
+        return self._names[name]
+
+    def view(self, v):
+        if isinstance(v, list):
+            return [self.view(x) for x in v]
+        if not isinstance(v, dict):
+            return v
+        if v.get("product-class") == _EXPR_ID:
+            out = {"id": v["id"]}
+            if v.get("jvmId", self.jvm_id) != self.jvm_id:
+                out["jvmId"] = v["jvmId"]
+            return out
+        out = {k: self.view(x) for k, x in v.items() if k not in VIEW_DROPPED}
+        if isinstance(out.get("class"), str):
+            out["class"] = self._class(out["class"])
+        return out
+
+
+_RULES: dict[int, _ViewRule] = {}
+
+
+def view_rule(spark) -> _ViewRule:
+    """The view rule for ``spark``'s JVM (built once per session)."""
+    key = id(spark._jvm)
+    if key not in _RULES:
+        _RULES[key] = _ViewRule(spark)
+    return _RULES[key]
+
+
+def check_json(df) -> dict:
+    """The exporter's reply for ``df`` against ``toJSON()`` of its analyzed
+    plan, both taken on the analyzer's export worker: ``same`` (the reply's
+    plan is the view of ``toJSON()``, node for node), the ``fallbacks`` the
+    reply reports, ``where`` the first difference ("" when same), and the
+    UTF-8 sizes ``reply_bytes`` and ``tojson_bytes``."""
     from score_spark.schema_on_read import generator as G
 
-    jplan = df._jdf.queryExecution().analyzed()
-    reply, want = G._plan_json_pool().submit(lambda: (G._export_plan(jplan), jplan.toJSON())).result()
-    fallbacks = json.loads(reply)["fallbacks"]
-    same = f'"plan":{want},"fallbacks":' in reply
-    if same:
-        return True, fallbacks, ""
-    got = reply[reply.index('"plan":') + len('"plan":'):]
-    at = next((i for i, (a, b) in enumerate(zip(got, want)) if a != b), min(len(got), len(want)))
-    return False, fallbacks, f"first difference at {at}: got {got[max(0, at - 80):at + 80]!r} want {want[max(0, at - 80):at + 80]!r}"
+    jdf = df._jdf
+    reply, full = G._plan_json_pool().submit(
+        lambda: (G._export_plan(jdf), jdf.queryExecution().analyzed().toJSON())
+    ).result()
+    payload = json.loads(reply)
+    rule = view_rule(df.sparkSession)
+    got, want = payload["plan"], rule.view(json.loads(full))
+    out = {
+        "same": got == want,
+        "fallbacks": payload["fallbacks"],
+        "where": "",
+        "reply_bytes": len(reply.encode()),
+        "tojson_bytes": len(full.encode()),
+    }
+    if got != want:
+        at = next((i for i, (a, b) in enumerate(zip(got, want)) if a != b), min(len(got), len(want)))
+        g, w = (json.dumps(nodes[at])[:300] if at < len(nodes) else None for nodes in (got, want))
+        out["where"] = f"first difference at node {at} of {len(want)}: got {g} want {w}"
+    return out
 
 
 def digest(df, sources: list) -> str:
@@ -150,7 +219,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     mode = ap.add_mutually_exclusive_group(required=True)
-    mode.add_argument("--check-json", action="store_true", help="exporter plan JSON == toJSON(), 0 fallbacks")
+    mode.add_argument("--check-json", action="store_true", help="exporter plan JSON == view of toJSON(), 0 fallbacks")
     mode.add_argument("--digest", action="store_true", help="print a for_paths SHA-256 per plan")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"), help="testdata directory")
     ap.add_argument("--match", help="only plans whose name matches this regex")
@@ -164,13 +233,14 @@ def main(argv: list[str] | None = None) -> dict:
     try:
         with tempfile.TemporaryDirectory(prefix="plan-corpus-") as tmp:
             if args.check_json:
-                report.update(failed={}, fallbacks=0)
+                report.update(failed={}, fallbacks=0, reply_bytes=0, tojson_bytes=0)
                 for name, df, _ in plans(spark, args.sf, tmp, args.match):
-                    same, fallbacks, where = check_json(df)
+                    checked = check_json(df)
                     report["plans"] += 1
-                    report["fallbacks"] += fallbacks
-                    if not same or fallbacks:
-                        report["failed"][name] = where or f"{fallbacks} fallbacks"
+                    for k in ("fallbacks", "reply_bytes", "tojson_bytes"):
+                        report[k] += checked[k]
+                    if not checked["same"] or checked["fallbacks"]:
+                        report["failed"][name] = checked["where"] or f"{checked['fallbacks']} fallbacks"
             else:
                 report["digests"] = {}
                 for name, df, sources in plans(spark, args.sf, tmp, args.match):
